@@ -39,7 +39,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType, DoubleType, FloatType, StructField, StructType,
+)
 
 from gr_tdigest_spark import validation
 from gr_tdigest_spark.sketches import wire as td_wire
@@ -630,67 +632,69 @@ def _partial_builder_arrow(
 # generic two-phase plan
 # --------------------------------------------------------------------- #
 
-# Conf key (bytes): inputs whose projected size is at or under this are
-# eligible for the single-phase by-key rebalance when their scan has
-# fewer partitions than the cluster's task slots. 0 disables the
-# rebalance entirely. The default is scale-adaptive (64 MB per task
-# slot), so the same code picks the shuffle-free two-phase plan on a
-# 100 TB table and the fully-parallel single-phase plan on a
-# one-row-group fixture file.
-_REBALANCE_CONF = "spark.gr_tdigest.agg.rebalance.maxBytes"
+# Inputs projected at or under this many MB per task slot (Catalyst's
+# estimate) are small enough that one raw-row repartition is cheaper
+# than a partial stage serialized through too few scan partitions.
+# Scale-adaptive: a 100 TB table keeps the shuffle-free two-phase plan,
+# a one-row-group fixture file gets the fully-parallel one.
 _REBALANCE_MB_PER_SLOT = 64
 # keyless (global) aggregates below this size keep the no-extra-shuffle
 # plan: one partial task is cheaper than an added exchange + AQE stage
+# (measured: a 600 k-row global build is ~0.35 s serial; the added hop
+# is ~0.4 s)
 _GLOBAL_REBALANCE_FLOOR = 16 << 20
-# keyed inputs at or under this size go single-phase by-key without
-# asking any further questions: even in the worst case (a handful of
-# fat groups) the per-task build is tens of ms. Above it, by-key
-# parallelism is capped at the number of DISTINCT keys, so a sampled
-# cardinality probe decides between by-key single-phase (many keys)
-# and round-robin two-phase (few keys → partial merge is cheap).
-_SINGLE_PHASE_SMALL = 24 << 20
-_CARD_SAMPLE_BYTES = 16 << 20
 
 
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Read a byte-count conf accepting either a plain integer or the
-    Spark size-suffix format ('64m', '2g', …)."""
-    raw = spark.conf.get(key, None)
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        pass
-    try:
-        return int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(raw)
-        )
-    except Exception:
-        raise ValueError(
-            f"{key} must be a byte count (e.g. 67108864 or '64m'), "
-            f"got {raw!r}"
-        )
+def _choose_agg_plan(n_parts: Optional[int], est: Optional[int],
+                     slots: int, by_key_ok: bool,
+                     keyed: bool) -> Tuple[str, int]:
+    """Plan for a Python pass over ``n_parts`` scan partitions (None:
+    streaming, already exchanged or salted) of ``est`` projected bytes
+    (None: no estimate) on ``slots`` task slots. Pure: no Spark calls.
+
+    Returns ``(kind, parts)``:
+
+    - ``'by_key'``: hash-repartition the raw rows by the keys into
+      ``parts``; every group is local to one partition, so the partials
+      are final (no blob shuffle, no merge stage). Gated on a small
+      input because it moves raw rows; its worst case (a few fat
+      keys) is bounded by one task per key.
+    - ``'spread'``: repartition into ``parts`` by a deterministic hash
+      spread, then the classic two-phase plan.
+    - ``'as_is'``: ``coalesce(parts)`` — no extra exchange.
+
+    ``by_key_ok``: there are keys and no float key column doubles as
+    the value or weight (see ``_by_key_ok``); ``keyed``: there are
+    keys at all."""
+    as_is = ("as_is", 2 * slots)
+    if n_parts is None or n_parts >= slots:
+        return as_is
+    cap = _REBALANCE_MB_PER_SLOT * (1 << 20) * slots
+    small = est is not None and est <= cap
+    if by_key_ok and small:
+        return "by_key", _rebalance_parts(est, slots)
+    if not keyed and est is not None and est <= _GLOBAL_REBALANCE_FLOOR:
+        return as_is
+    # big (or unestimable) inputs only in FAR too few partitions: the
+    # raw-row shuffle must buy ≥ 4× parallelism. A marginally coarse
+    # scan (e.g. 30 partitions on 32 slots) is left alone — seconds of
+    # shuffle for a few % of parallelism
+    if small or n_parts * 4 <= slots:
+        return "spread", _rebalance_parts(est, slots) if small else 2 * slots
+    return as_is
 
 
-def _rebalance_coarse_scan(src: DataFrame, by_cols: List[str]) -> DataFrame:
-    """Shared small-input rebalance gate for Python passes outside
-    sketch_agg (e.g. cms_topk's candidate tracker): hash-repartition an
-    exchange-free input that has fewer partitions than task slots and a
-    small Catalyst size estimate. One gate, one conf
-    (_REBALANCE_CONF), so the disable/threshold semantics cannot
-    drift between call sites."""
-    spark = src.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    n_parts, est = _probe_input(src)
-    if n_parts is None or n_parts >= target:
-        return src
-    thr = _conf_bytes(spark, _REBALANCE_CONF,
-                      _REBALANCE_MB_PER_SLOT * (1 << 20) * target)
-    if thr > 0 and est is not None and 0 < est <= thr:
-        return src.repartition(_rebalance_parts(est, target), *by_cols)
-    return src
+def _by_key_ok(schema: StructType, key_cols: List[str], value_col: str,
+               weight_col: Optional[str]) -> bool:
+    """True when the single-phase by-key plan may run: there are keys,
+    and no float/double key column doubles as the value (or weight) —
+    its -0.0/NaN key canonicalization would leak into the aggregated
+    VALUES, so such (contrived) aggregates keep the two-phase plan."""
+    return bool(key_cols) and not any(
+        c in (value_col, weight_col)
+        and isinstance(schema[c].dataType, (FloatType, DoubleType))
+        for c in key_cols
+    )
 
 
 def _rebalance_parts(est: int, target: int) -> int:
@@ -727,58 +731,9 @@ _PROBE_CACHE: Dict[tuple, tuple] = {}
 _PROBE_CACHE_MAX = 256
 
 
-_CARD_CACHE: Dict[tuple, bool] = {}
-
-
-def _enough_keys_for_by_key(src: DataFrame, key_cols: List[str],
-                            est: int, target: int) -> bool:
-    """Mid-size-band plan choice: hash-partitioning BY THE KEYS caps
-    the partial stage's parallelism at the number of distinct keys, so
-    it only beats round-robin two-phase when there are comfortably
-    more keys than task slots. One Bernoulli-sampled
-    approx_count_distinct over the key hash decides. The sample
-    fraction bounds the hashing/HLL CPU, not the I/O — the probe still
-    scans the key columns once (column-pruned); that one scan is the
-    price of the decision. The verdict is memoized with the probe
-    cache, so repeated runs of the same logical query pay it once (and
-    best-of-N timing never includes it).
-
-    Measured basis (6 M-row single-row-group input, 32 slots):
-    1.5 M-key t-digest build is 2.9 s by-key vs 50 s two-phase (the
-    Python merge decodes every multi-partial key), while a 3-key
-    bottom-k build is 3.5 s round-robin vs 4.3 s by-key (three fat
-    partitions). Few keys also make the two-phase merge trivially
-    cheap (keys × partials blobs), so each regime gets the plan that
-    wins there."""
-    try:
-        key = (id(src.sparkSession), src.semanticHash(), tuple(key_cols))
-    except Exception:
-        key = None
-    if key is not None and key in _CARD_CACHE:
-        return _CARD_CACHE[key]
-    try:
-        frac = min(1.0, float(_CARD_SAMPLE_BYTES) / max(est, 1))
-        sampled = src.select(
-            F.xxhash64(*key_cols).alias("__kh")
-        ).sample(fraction=frac, seed=7)
-        n_keys = sampled.agg(
-            F.approx_count_distinct("__kh").alias("n")
-        ).first()["n"]
-        ok = int(n_keys) >= 2 * target
-    except Exception:
-        ok = True  # by-key is the safe default: its worst case is
-        #            bounded (keys ≥ 1 task each), the two-phase worst
-        #            case (per-key Python merges) is not
-    if key is not None:
-        if len(_CARD_CACHE) >= _PROBE_CACHE_MAX:
-            _CARD_CACHE.pop(next(iter(_CARD_CACHE)))
-        _CARD_CACHE[key] = ok
-    return ok
-
-
 def _probe_input(src: DataFrame) -> tuple:
     """(scan partition count or None, Catalyst size estimate or None)
-    for the rebalance gate, memoized per (session, semantic hash)."""
+    for ``_choose_agg_plan``, memoized per (session, semantic hash)."""
     try:
         key = (id(src.sparkSession), src.semanticHash())
     except Exception:
@@ -839,11 +794,9 @@ def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
     without it a NaN key and a NULL key would land in different
     partitions and the single-phase plan would emit two rows for the
     one canonical group the two-phase merger produces."""
-    from pyspark.sql.types import DoubleType as _D, FloatType as _F
-
     for c in key_cols:
         dt = df.schema[c].dataType
-        if isinstance(dt, (_F, _D)):
+        if isinstance(dt, (FloatType, DoubleType)):
             col = F.col(c)
             df = df.withColumn(
                 c,
@@ -986,87 +939,31 @@ def sketch_agg(
 
     # Partial-build cost is dominated by a fixed per-(flush, group) term
     # (pile coalescing + k-limit cap search), so many small partitions
-    # anti-scale. Run the partial stage at ~1 partition per core: fewer,
-    # bigger flushes amortize the fixed term; the 1M-row flush threshold
-    # bounds memory.
-    #
-    # coalesce() cannot SPLIT a too-coarse input — and a single-row-group
+    # anti-scale: an input already at slot-grade parallelism runs its
+    # partial stage coalesced to ~2 partitions per slot. coalesce()
+    # cannot SPLIT a too-coarse input, though — a single-row-group
     # parquet file (or any driver-synthesized DataFrame with fewer
-    # partitions than cores) serializes the whole partial stage through
-    # one Python task. When the scan has fewer partitions than task
-    # slots, rebalance it (guide §2.5 input skew: "repartition
-    # immediately after the read"):
-    #
-    # - keyed + small input (≤ 64 MB/slot by Catalyst's estimate, conf
-    #   below; above 24 MB a sampled key-cardinality probe must also
-    #   find ≥ 2·slots distinct keys, since by-key parallelism is
-    #   capped at the key count): hash-repartition the raw rows BY THE
-    #   KEYS and run SINGLE-PHASE — every group is completely local to
-    #   one partition, so the partials are final and the blob shuffle
-    #   + merge stage disappear (one Exchange total, one Python
-    #   stage). The shuffle moves raw rows, which is exactly why it is
-    #   gated on the input being small; at scale the sketch-sized
-    #   two-phase shuffle wins.
-    # - otherwise: deterministic hash-spread repartition
-    #   (xxhash64(keys…, value) — NOT round-robin, whose keyless form
-    #   sorts the map side serially), classic two-phase; only sketch
-    #   blobs reshuffle after the partials.
-    #
-    # Streaming inputs take the classic path untouched (.rdd/stats are
-    # batch-only introspection).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    single_phase = False
+    # partitions than slots) would serialize the partial stage through
+    # one Python task — so such inputs are repartitioned right after
+    # the read (guide §2.5 input skew), by the keys (single phase) or
+    # by a hash spread (two phase); see _choose_agg_plan. Salted
+    # aggregates are the caller's explicit extreme-skew plan and keep
+    # their shape (salt hop + de-salt hop, pinned).
     has_salt = bool(salt_buckets and salt_buckets > 1)
-    # salted aggregates are the caller's explicit extreme-skew plan —
-    # leave their shape alone (salt hop + de-salt hop, pinned)
     n_parts, est = (None, None) if has_salt else _probe_input(src)
-    if n_parts is not None and n_parts < target:
-        thr = _conf_bytes(df.sparkSession, _REBALANCE_CONF,
-                          _REBALANCE_MB_PER_SLOT * (1 << 20) * target)
-        if thr <= 0:
-            est = None
-        # a float/double key column doubling as the value (or weight)
-        # column would have its -0.0/NaN canonicalization leak into the
-        # aggregated VALUES on the single-phase path — keep such
-        # (contrived) aggregates on the two-phase plan, whose semantics
-        # are the historical ones
-        from pyspark.sql.types import DoubleType as _D, FloatType as _F
-        float_overlap = any(
-            c in (value_col, weight_col)
-            and isinstance(src.schema[c].dataType, (_F, _D))
-            for c in key_cols
+    kind, parts = _choose_agg_plan(
+        n_parts, est, df.sparkSession.sparkContext.defaultParallelism,
+        _by_key_ok(src.schema, key_cols, value_col, weight_col),
+        bool(key_cols),
+    )
+    if kind == "by_key":
+        src = _canon_float_keys(src, key_cols).repartition(parts, *key_cols)
+    elif kind == "spread":
+        src = src.repartition(
+            parts, _spread_expr(src, key_cols, value_col, weight_col)
         )
-        if key_cols and not float_overlap and est is not None \
-                and est <= thr \
-                and (est <= _SINGLE_PHASE_SMALL
-                     or _enough_keys_for_by_key(src, key_cols, est,
-                                                target)):
-            src = _canon_float_keys(src, key_cols)
-            src = src.repartition(_rebalance_parts(est, target), *key_cols)
-            single_phase = True
-        elif not key_cols and est is not None \
-                and est <= _GLOBAL_REBALANCE_FLOOR:
-            # keyless and tiny: the extra exchange + AQE stage costs
-            # more than the serial build it would parallelize
-            # (measured: a 600 k-row global build is ~0.35 s serial;
-            # the added hop is ~0.4 s)
-            src = src.coalesce(2 * target)
-        elif thr > 0 and est is not None and est <= thr:
-            src = src.repartition(_rebalance_parts(est, target),
-                                  _spread_expr(src, key_cols, value_col,
-                                               weight_col))
-        elif thr > 0 and n_parts * 4 <= target:
-            # big (or unestimable) input in FAR too few partitions: the
-            # raw-row shuffle buys ≥ 4× parallelism. A marginally
-            # coarse scan (e.g. 30 partitions on 32 slots) is left
-            # alone — seconds of shuffle for a few % of parallelism
-            src = src.repartition(2 * target,
-                                  _spread_expr(src, key_cols, value_col,
-                                               weight_col))
-        else:
-            src = src.coalesce(2 * target)
     else:
-        src = src.coalesce(2 * target)
+        src = src.coalesce(parts)
 
     out_fields = [src.schema[k] for k in key_cols] + [
         StructField(out_col, BinaryType(), True)
@@ -1088,8 +985,8 @@ def sketch_agg(
             schema=out_schema,
         )
 
-    if single_phase:
-        # the by-key rebalance made every group local to one partition:
+    if kind == "by_key":
+        # the by-key repartition made every group local to one partition:
         # each key has exactly one partial (multi-flush partitions merge
         # locally in the builder's states dict), so the partials ARE the
         # result — no blob shuffle, no merge stage.
@@ -1101,7 +998,7 @@ def sketch_agg(
         )
         return merged
 
-    if salt_buckets and salt_buckets > 1:
+    if has_salt:
         salted = partials.withColumn(
             "__salt", F.pmod(F.crc32(F.col(out_col)), F.lit(salt_buckets))
         )

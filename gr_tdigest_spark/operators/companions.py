@@ -1182,15 +1182,21 @@ def cms_topk(
     m = m or max(4 * k, 64)
     src = df.select(*dict.fromkeys(key_cols + [col]))
     # a one-row-group scan would serialize the Python candidate pass
-    # through one task (guide §2.5 input skew); rebalance small coarse
-    # inputs by (keys, value) — collocating a value's copies makes each
-    # partition's local count the value's TRUE count, so candidate
-    # completeness only improves. Same scale-adaptive gate as
-    # sketch_agg: big inputs with healthy scan parallelism never pay
-    # the raw-row shuffle.
-    from gr_tdigest_spark.operators.agg import _rebalance_coarse_scan
+    # through one task (guide §2.5 input skew); the sketch_agg plan
+    # chooser decides whether to repartition by (keys, value) —
+    # collocating a value's copies makes each partition's local count
+    # the value's TRUE count, so candidate completeness only improves.
+    from gr_tdigest_spark.operators.agg import (
+        _choose_agg_plan, _probe_input,
+    )
 
-    src = _rebalance_coarse_scan(src, list(dict.fromkeys(key_cols + [col])))
+    n_parts, est = _probe_input(src)
+    kind, parts = _choose_agg_plan(
+        n_parts, est, df.sparkSession.sparkContext.defaultParallelism,
+        by_key_ok=True, keyed=True,
+    )
+    if kind != "as_is":
+        src = src.repartition(parts, *dict.fromkeys(key_cols + [col]))
     cand_schema = StructType(
         [src.schema[c] for c in key_cols] + [src.schema[col]]
     )

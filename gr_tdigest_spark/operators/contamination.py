@@ -249,11 +249,14 @@ class ContaminationFilter:
         self.blob, self.n, self.seed, self.n_bench_grams = state
 
 
-# collect-build toggle: "true" (default) pulls the benchmark's distinct
-# gram hashes (8 B each) to the driver and sets the Bloom bits locally —
+# collect-build toggle: "true" (default) pulls each benchmark
+# document's distinct gram-hash array (8 B per hash) to the driver,
+# which dedupes them with np.unique and sets the Bloom bits locally —
 # ONE Spark job instead of three (count + two-phase aggregate + first).
-# The driver footprint is the same order as the join method's broadcast
-# gram table (benchmarks are the small side by contract); set "false"
+# Driver memory scales with the per-document distinct gram occurrences
+# summed over the documents, not with the global distinct set: the same
+# order as the benchmark text and as the join method's broadcast gram
+# table (benchmarks are the small side by contract); set "false"
 # for a pathologically large benchmark to build through the distributed
 # bloom_agg instead. Both paths produce byte-identical blobs (bitwise
 # OR of the same positions, same n_added bookkeeping).

@@ -223,11 +223,9 @@ def checkpoint_lineage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
         p.groupBy("shard_id", "attempt")
         .agg(
             F.max("rows_ingested").alias("rows_ingested"),
-            F.countDistinct(*[c for c in ("attempt",)]).alias("_a"),
             F.count("*").alias("n_partial_rows"),
             F.max("wall_ms").alias("wall_ms"),
         )
-        .drop("_a")
         .orderBy("shard_id")
     )
 
