@@ -10,14 +10,24 @@ tdigest_summary / tdigest_wire_precision`` plus cheap header-level stats
 
 All functions are Arrow-vectorized pandas UDFs over a BinaryType digest
 column (the TDIG v3 blob is the canonical in-DataFrame representation —
-~17 KB at max_size=1000, shuffle- and store-friendly). Digest-level
-stats decode only the 64-byte header, not the payload.
+~17 KB at max_size=1000, shuffle- and store-friendly).
+
+- Quantile / CDF / median (``tdigest_quantile(s)``, ``tdigest_cdf(s)``,
+  ``tdigest_cdf_col``, ``tdigest_median`` and their ``register_sql``
+  names) decode each Arrow batch once with ``wire.decode_batch`` —
+  identical blobs once — and answer every row in one ``DigestBatch``
+  kernel call.
+- Header stats (count/sum/min/max/mean/n_centroids/wire_precision) read
+  the header columns of the same decoder: no payload decode and no
+  checksum. A NULL blob raises ``ValueError("null TDIG blob")``, a
+  truncated one ``WireError("buffer too small")``.
+- Summary, trimmed mean and the digest → digest transforms decode one
+  blob per row.
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from typing import List, Optional, Sequence, Union
 
 import numpy as np
@@ -78,17 +88,18 @@ def _map_blobs(series: pd.Series, fn, dtype=object) -> pd.Series:
     return pd.Series(out, dtype=dtype)
 
 
-def _group_rows_by_blob(blobs: pd.Series):
-    """Yield (blob_bytes, row_indices) so each DISTINCT digest decodes
-    once per Arrow batch and its probes run as one vectorized kernel
-    call. After a broadcast digest⋈probe join every fact row carries its
-    group's (identical) blob — per-row decode would cost ~17 KB × rows.
-    """
-    uniq: dict = {}
-    for i, b in enumerate(blobs):
-        uniq.setdefault(None if b is None else bytes(b), []).append(i)
-    for bb, idxs in uniq.items():
-        yield bb, np.asarray(idxs, dtype=np.int64)
+def _quantiles(batch, qs: np.ndarray) -> np.ndarray:
+    """(digests × probes) quantiles; empty digests' rows are NaN (null)."""
+    d = np.arange(batch.n.size)
+    out = batch.quantile(d[:, None], qs[None, :]).reshape(d.size, qs.size)
+    out[batch.empty] = np.nan
+    return out
+
+
+def _cdfs(batch, xs: np.ndarray) -> np.ndarray:
+    """(digests × probes) CDF values; empty digests give NaN."""
+    d = np.arange(batch.n.size)
+    return batch.cdf(d[:, None], xs[None, :]).reshape(d.size, xs.size)
 
 
 def empty_tdigest(
@@ -117,16 +128,12 @@ def empty_tdigest(
 def tdigest_quantile(col, q: float) -> Column:
     """Quantile of each digest row; strict probe validation
     (frontends.rs:152-160); empty digest → null (polars_expr.rs:1149-1170)."""
-    qv = validation.validate_quantile_probe(q)
+    qv = np.asarray([validation.validate_quantile_probe(q)])
 
     @F.pandas_udf(DoubleType())
     def _q(blobs: pd.Series) -> pd.Series:
-        def one(td):
-            if td.is_effectively_empty:
-                return None
-            return float(td.quantile(qv))
-
-        return _map_blobs(blobs, one, dtype="float64")
+        b = td_wire.decode_batch(blobs)
+        return pd.Series(_quantiles(b, qv)[b.rows, 0])
 
     return _q(col)
 
@@ -137,25 +144,22 @@ def tdigest_quantiles(col, qs: Sequence[float]) -> Column:
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _qs(blobs: pd.Series) -> pd.Series:
-        def one(td):
-            if td.is_effectively_empty:
-                return None
-            return td.quantile(qarr).tolist()
-
-        return _map_blobs(blobs, one)
+        b = td_wire.decode_batch(blobs)
+        out = pd.Series(_quantiles(b, qarr)[b.rows].tolist(), dtype=object)
+        out[b.empty[b.rows]] = None
+        return out
 
     return _qs(col)
 
 
 def tdigest_cdf(col, x: float) -> Column:
     """CDF at a constant probe; empty digest → NaN (tdigest.rs:349-360)."""
-    xv = float(x)
+    xv = np.asarray([float(x)])
 
     @F.pandas_udf(DoubleType())
     def _c(blobs: pd.Series) -> pd.Series:
-        return _map_blobs(
-            blobs, lambda td: float(td.cdf([xv])[0]), dtype="float64"
-        )
+        b = td_wire.decode_batch(blobs)
+        return pd.Series(_cdfs(b, xv)[b.rows, 0])
 
     return _c(col)
 
@@ -166,40 +170,40 @@ def tdigest_cdfs(col, xs: Sequence[float]) -> Column:
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _cs(blobs: pd.Series) -> pd.Series:
-        return _map_blobs(blobs, lambda td: td.cdf(xarr).tolist())
+        b = td_wire.decode_batch(blobs)
+        return pd.Series(_cdfs(b, xarr)[b.rows].tolist(), dtype=object)
 
     return _cs(col)
+
+
+def _cdf_col_udf():
+    @F.pandas_udf(DoubleType())
+    def _c(blobs: pd.Series, xs: pd.Series) -> pd.Series:
+        b = td_wire.decode_batch(blobs)
+        xarr = xs.to_numpy(dtype=np.float64, na_value=np.nan)
+        return pd.Series(b.cdf(b.rows, xarr))
+
+    return _c
 
 
 def tdigest_cdf_col(digest_col, probe_col) -> Column:
     """CDF with a per-row probe column (digest ⋈ probe pattern,
     reference polars_expr.rs:920-983)."""
+    return _cdf_col_udf()(digest_col, probe_col)
 
+
+def _median_udf():
     @F.pandas_udf(DoubleType())
-    def _c(blobs: pd.Series, xs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs))
-        xarr = xs.to_numpy(dtype=np.float64, na_value=np.nan)
-        for bb, idxs in _group_rows_by_blob(blobs):
-            td = _decode(bb)
-            out[idxs] = td.cdf(xarr[idxs])
-        return pd.Series(out)
+    def _m(blobs: pd.Series) -> pd.Series:
+        b = td_wire.decode_batch(blobs)
+        return pd.Series(b.median(np.arange(b.n.size))[b.rows])
 
-    return _c(digest_col, probe_col)
+    return _m
 
 
 def tdigest_median(col) -> Column:
     """Median with even-count branch (quantile.rs:219-233); empty → null."""
-
-    @F.pandas_udf(DoubleType())
-    def _m(blobs: pd.Series) -> pd.Series:
-        def one(td):
-            if td.is_effectively_empty:
-                return None
-            return float(td.median())
-
-        return _map_blobs(blobs, one, dtype="float64")
-
-    return _m(col)
+    return _median_udf()(col)
 
 
 def tdigest_trimmed_mean(col, lower: float, upper: float) -> Column:
@@ -219,82 +223,56 @@ def tdigest_trimmed_mean(col, lower: float, upper: float) -> Column:
 
 
 # ---------------------------------------------------------------------- #
-# header-only stats — decode 64 bytes, not the payload
+# header-only stats — the decoder's header columns, not the payload
 # ---------------------------------------------------------------------- #
 
-def _header_stat(offset: int, fmt: str = "<d"):
-    def extract(blob):
-        if blob is None:
-            raise ValueError("null TDIG blob")
-        b = bytes(blob)
-        if b[:4] != b"TDIG" or b[4] != 3:
-            # non-v3: full decode fallback
-            td = td_wire.decode(b)
-            return {20: td.count, 28: td.min, 36: td.max, 52: td.sum}[offset]
-        return struct.unpack_from(fmt, b, offset)[0]
+def _header_udf(stat, returns=DoubleType()):
+    """Pandas UDF of one per-digest header stat, ``stat(batch)``."""
 
-    return extract
+    @F.pandas_udf(returns)
+    def _h(blobs: pd.Series) -> pd.Series:
+        b = td_wire.decode_batch(blobs, header_only=True)
+        return pd.Series(stat(b)[b.rows])
+
+    return _h
 
 
-def _stat_udf(offset: int):
-    ex = _header_stat(offset)
-
-    @F.pandas_udf(DoubleType())
-    def _s(blobs: pd.Series) -> pd.Series:
-        return pd.Series([float(ex(b)) for b in blobs], dtype="float64")
-
-    return _s
+def _field_udf(name: str):
+    return _header_udf(lambda b: getattr(b, name))
 
 
 def tdigest_count(col) -> Column:
     """Total weight ∑w (v3 header bytes 20..28)."""
-    return _stat_udf(20)(col)
+    return _field_udf("count")(col)
 
 
 def tdigest_min(col) -> Column:
-    return _stat_udf(28)(col)
+    return _field_udf("min")(col)
 
 
 def tdigest_max(col) -> Column:
-    return _stat_udf(36)(col)
+    return _field_udf("max")(col)
 
 
 def tdigest_sum(col) -> Column:
     """∑x over raw data (v3 header bytes 52..60)."""
-    return _stat_udf(52)(col)
+    return _field_udf("sum")(col)
 
 
 def tdigest_mean(col) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _mean(blobs: pd.Series) -> pd.Series:
-        def one(blob):
-            b = bytes(blob)
-            if b[:4] == b"TDIG" and b[4] == 3:
-                (cnt,) = struct.unpack_from("<d", b, 20)
-                (s,) = struct.unpack_from("<d", b, 52)
-            else:
-                td = td_wire.decode(b)
-                cnt, s = td.count, td.sum
-            return s / cnt if cnt > 0 else 0.0
+    """∑x / ∑w; 0.0 for a zero-count digest."""
 
-        return pd.Series([one(b) for b in blobs], dtype="float64")
+    def mean(b):
+        live = b.count > 0
+        return np.where(live, b.sum / np.where(live, b.count, 1.0), 0.0)
 
-    return _mean(col)
+    return _header_udf(mean)(col)
 
 
 def tdigest_n_centroids(col) -> Column:
-    @F.pandas_udf(IntegerType())
-    def _n(blobs: pd.Series) -> pd.Series:
-        def one(blob):
-            b = bytes(blob)
-            if b[:4] == b"TDIG" and b[4] == 3:
-                (n,) = struct.unpack_from("<Q", b, 44)
-                return int(n)
-            return len(td_wire.decode(b))
-
-        return pd.Series([one(b) for b in blobs], dtype="int32")
-
-    return _n(col)
+    return _header_udf(
+        lambda b: b.n.astype(np.int32), IntegerType()
+    )(col)
 
 
 def tdigest_summary(col) -> Column:
@@ -309,14 +287,7 @@ def tdigest_summary(col) -> Column:
 
 def tdigest_wire_precision(col) -> Column:
     """'f32'/'f64' header sniff (wire.rs:224-272)."""
-
-    @F.pandas_udf(StringType())
-    def _p(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [td_wire.wire_precision(bytes(b)) for b in blobs], dtype="string"
-        )
-
-    return _p(col)
+    return _header_udf(lambda b: b.precision, StringType())(col)
 
 
 # ---------------------------------------------------------------------- #
@@ -378,41 +349,20 @@ def register_sql(spark) -> None:
     """
     @F.pandas_udf(DoubleType())
     def _q(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs))
-        qarr = np.asarray(
-            [validation.validate_quantile_probe(float(q)) for q in qs]
-        )
-        for bb, idxs in _group_rows_by_blob(blobs):
-            td = _decode(bb)
-            if td.is_effectively_empty:
-                out[idxs] = np.nan
-            else:
-                out[idxs] = td.quantile(qarr[idxs])
-        return pd.Series(out, dtype="float64")
-
-    @F.pandas_udf(DoubleType())
-    def _c(blobs: pd.Series, xs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs))
-        xarr = xs.to_numpy(dtype=np.float64, na_value=np.nan)
-        for bb, idxs in _group_rows_by_blob(blobs):
-            td = _decode(bb)
-            out[idxs] = td.cdf(xarr[idxs])
-        return pd.Series(out, dtype="float64")
-
-    @F.pandas_udf(DoubleType())
-    def _m(blobs: pd.Series) -> pd.Series:
-        def one(td):
-            return None if td.is_effectively_empty else float(td.median())
-
-        return _map_blobs(blobs, one, dtype="float64")
+        qarr = qs.to_numpy(dtype=np.float64, na_value=np.nan)
+        bad = ~((qarr >= 0.0) & (qarr <= 1.0))
+        if bad.any():
+            validation.validate_quantile_probe(qarr[np.argmax(bad)])
+        b = td_wire.decode_batch(blobs)
+        out = b.quantile(b.rows, qarr)
+        out[b.empty[b.rows]] = np.nan
+        return pd.Series(out)
 
     spark.udf.register("tdigest_quantile", _q)
-    spark.udf.register("tdigest_cdf", _c)
-    spark.udf.register("tdigest_median", _m)
-    spark.udf.register("tdigest_count", _stat_udf(20))
-    spark.udf.register("tdigest_min", _stat_udf(28))
-    spark.udf.register("tdigest_max", _stat_udf(36))
-    spark.udf.register("tdigest_sum", _stat_udf(52))
+    spark.udf.register("tdigest_cdf", _cdf_col_udf())
+    spark.udf.register("tdigest_median", _median_udf())
+    for name in ("count", "min", "max", "sum"):
+        spark.udf.register(f"tdigest_{name}", _field_udf(name))
 
 
 # digest struct schema — unlike the reference's Polars codec

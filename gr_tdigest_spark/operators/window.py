@@ -155,17 +155,17 @@ def _broadcast_cdf(df, key_cols, probe_col, out_col, digests):
                 use_na_sentinel=False,
             )
             key_tuples = [_canon_key_tuple(u) for u in uniques]
-        order = np.argsort(codes, kind="stable")
-        bounds = np.searchsorted(
-            codes[order], np.arange(len(key_tuples) + 1)
-        )
+        # the batch's groups decode once, then one cdf kernel call over
+        # every row whose group has a digest; unseen groups stay null,
+        # matching a left join
         mp = bc.value
-        for gi, key in enumerate(key_tuples):
-            blob = mp.get(key)
-            if blob is None:
-                continue  # unseen group → null, matching a left join
-            idx = order[bounds[gi]:bounds[gi + 1]]
-            out[idx] = td_wire.decode(blob).cdf(xarr[idx])
+        blobs = [mp.get(key) for key in key_tuples]
+        known = np.asarray([bb is not None for bb in blobs], dtype=bool)
+        batch = td_wire.decode_batch([bb for bb in blobs if bb is not None])
+        digest = np.full(len(blobs), -1, dtype=np.int64)
+        digest[known] = batch.rows
+        rows = np.flatnonzero(known[codes])
+        out[rows] = batch.cdf(digest[codes[rows]], xarr[rows])
         return pd.Series(out)
 
     return df.withColumn(out_col, _cdf(*key_cols, probe_col))
@@ -181,10 +181,10 @@ def _cogroup_cdf(df, key_cols, probe_col, out_col, digests):
     def attach(facts: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
         res = facts.copy()
         if len(dig) and len(facts):
-            td = td_wire.decode(bytes(dig["tdigest"].iloc[0]))
+            batch = td_wire.decode_batch(dig["tdigest"].iloc[:1])
             xs = facts[probe_col].to_numpy(dtype=np.float64,
                                            na_value=np.nan)
-            res[out_col] = td.cdf(xs)
+            res[out_col] = batch.cdf(0, xs)
         else:
             res[out_col] = np.nan
         return res

@@ -28,19 +28,24 @@ Semantics reproduced (reference citations for parity checking):
 The implementation is intentionally *not* a translation of the Rust code:
 clustering decisions are made with vectorized prefix sums +
 ``np.searchsorted`` jumps (O(clusters·log n)) instead of per-centroid
-loops, which is the right shape for Arrow-batched execution.
+loops, which is the right shape for Arrow-batched execution. Queries
+run on a ``DigestBatch`` (many digests as flat columns), so a whole
+Arrow batch of digests is answered in one kernel call; the ``TDigest``
+query methods are the one-digest case of the same kernels.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Iterable, Optional, Sequence, Tuple, Union
 
 import numpy as np
 
 __all__ = [
     "TDigest",
+    "DigestBatch",
     "SCALE_FAMILIES",
     "POLICIES",
     "DEFAULT_MAX_SIZE",
@@ -62,6 +67,9 @@ KIND_ATOMIC = 0
 KIND_MIXED = 1
 
 _LN2 = math.log(2.0)
+
+# digests per padded prefix-sum matrix in DigestBatch (bounds its memory)
+_PREFIX_CHUNK = 4096
 
 
 def q_to_k(q, d: float, family: str, n: float):
@@ -729,219 +737,17 @@ class TDigest:
         interpolation (quantile.rs:47-188). NaN q → NaN; empty → NaN;
         finite q clamped to [0,1]."""
         scalar = np.isscalar(q) or (isinstance(q, np.ndarray) and q.ndim == 0)
-        qs = np.atleast_1d(np.asarray(q, dtype=np.float64))
-        out = self._quantile_batch(qs)
+        out = DigestBatch.of(self).quantile(0, q)
         return float(out[0]) if scalar else out
-
-    def _quantile_batch(self, qs: np.ndarray) -> np.ndarray:
-        m = self.means64
-        n_c = m.size
-        out = np.full(qs.size, np.nan)
-        if n_c == 0:
-            return out
-        nan_mask = np.isnan(qs)
-        if n_c == 1:
-            out[~nan_mask] = m[0]
-            return out
-        w = self.weights64
-        kinds = self.kinds
-        total = self.count
-        q = np.clip(qs, 0.0, 1.0)
-        index = q * total
-
-        lo_mask = (index < 1.0) & ~nan_mask
-        hi_mask = (index > total - 1.0) & ~nan_mask
-        mid_mask = ~(lo_mask | hi_mask | nan_mask)
-        out[lo_mask] = self.min
-        out[hi_mask] = self.max
-        if not np.any(mid_mask):
-            return out
-
-        idx = index[mid_mask]
-        prefix = np.concatenate(([0.0], np.cumsum(w)))[:-1]  # exclusive
-        centers = prefix + 0.5 * w  # cumulative weight at each centroid center
-        # left bracket: last i with centers[i+1] <= index, clamped to m-2
-        li = np.searchsorted(centers[1:], idx, side="right")
-        li = np.minimum(li, n_c - 2)
-        ri = li + 1
-
-        wl, wr = w[li], w[ri]
-        ml, mr = m[li], m[ri]
-        cl = centers[li]
-        cr = centers[ri]
-        atomic_l = kinds[li] == KIND_ATOMIC
-        atomic_r = kinds[ri] == KIND_ATOMIC
-
-        res = np.empty(idx.size)
-        done = np.zeros(idx.size, dtype=bool)
-
-        # atomic-pile snap (strictly inside half-width)
-        pile_l = atomic_l & (wl > 1.0) & (cl - wl / 2.0 < idx) & (idx < cl + wl / 2.0)
-        res[pile_l] = ml[pile_l]
-        done |= pile_l
-        pile_r = (
-            ~done
-            & atomic_r
-            & (wr > 1.0)
-            & (cr - wr / 2.0 < idx)
-            & (idx < cr + wr / 2.0)
-        )
-        res[pile_r] = mr[pile_r]
-        done |= pile_r
-
-        # unit-singleton snap (±0.5 of center) — weight-based like reference
-        snap_l = ~done & (wl == 1.0) & ((idx - cl) < 0.5)
-        res[snap_l] = ml[snap_l]
-        done |= snap_l
-        snap_r = ~done & (wr == 1.0) & ((cr - idx) < 0.5)
-        res[snap_r] = mr[snap_r]
-        done |= snap_r
-
-        # linear interpolation with unit-singleton dead zones.  The
-        # reference *guarantees* quantile is monotone in q
-        # (quantile.rs:8-33), so the lerp must be monotone in floats too:
-        #  - denom is computed idx-independently ((cr-cl)-dead, NOT
-        #    toward_r+toward_l, which wobbles by an ulp as idx moves),
-        #    making t = toward_r/denom monotone in idx (IEEE ops with one
-        #    constant operand are monotone);
-        #  - the result is clamped into the [ml, mr] bracket, whose
-        #    endpoints are themselves monotone across brackets, so a
-        #    1-ulp overshoot can never produce a dip at a bracket edge.
-        dead_l = np.where(wl == 1.0, 0.5, 0.0)
-        dead_r = np.where(wr == 1.0, 0.5, 0.0)
-        toward_r = idx - cl - dead_l
-        denom = (cr - cl) - dead_l - dead_r
-        pos = denom > 0.0
-        t = np.clip(
-            np.where(pos, toward_r / np.where(pos, denom, 1.0), 0.5),
-            0.0,
-            1.0,
-        )
-        interp = np.clip(
-            np.where(pos, ml + (mr - ml) * t, 0.5 * (ml + mr)), ml, mr
-        )
-        res[~done] = interp[~done]
-        out[mid_mask] = res
-        return out
 
     def cdf(self, vals) -> np.ndarray:
         """CDF at each probe (cdf.rs:61-203). Empty digest → all-NaN;
         NaN probe → NaN; below min → 0; above max → 1."""
-        xs = np.atleast_1d(np.asarray(vals, dtype=np.float64))
-        if self.is_effectively_empty:
-            return np.full(xs.size, np.nan)
-        m = self.means64
-        w = self.weights64
-        kinds = self.kinds
-        n_c = m.size
-        prefix = np.concatenate(([0.0], np.cumsum(w)))[:-1]
-        total = float(prefix[-1] + w[-1])
-        min_v, max_v = self.min, self.max
-
-        out = np.full(xs.size, np.nan)
-        ok = ~np.isnan(xs)
-        x = xs[ok]
-        res = np.empty(x.size)
-
-        idx = np.searchsorted(m, x, side="left")
-        exact = np.zeros(x.size, dtype=bool)
-        inb = idx < n_c
-        exact[inb] = m[idx[inb]] == x[inb]
-
-        # exact centroid hit: midpoint mass
-        ei = idx[exact]
-        res[exact] = (prefix[ei] + 0.5 * w[ei]) / total
-
-        rest = ~exact
-        # left tail: idx == 0
-        left = rest & (idx == 0)
-        if np.any(left):
-            xv = x[left]
-            m0, w0 = m[0], w[0]
-            gap = m0 - min_v
-            r = np.empty(xv.size)
-            below = xv < min_v
-            r[below] = 0.0
-            if gap > 0.0:
-                at_min = ~below & (xv == min_v)
-                r[at_min] = 0.5 / total
-                ramp = ~below & ~at_min
-                r[ramp] = (1.0 + (xv[ramp] - min_v) / gap * (w0 / 2.0 - 1.0)) / total
-            else:
-                r[~below] = 0.0
-            res[left] = r
-
-        # right tail: idx == n_c
-        right = rest & (idx == n_c)
-        if np.any(right):
-            xv = x[right]
-            mn_, wn_ = m[-1], w[-1]
-            gap = max_v - mn_
-            r = np.empty(xv.size)
-            above = xv > max_v
-            r[above] = 1.0
-            if gap > 0.0:
-                at_max = ~above & (xv == max_v)
-                r[at_max] = 1.0 - 0.5 / total
-                ramp = ~above & ~at_max
-                dq = (1.0 + (max_v - xv[ramp]) / gap * (wn_ / 2.0 - 1.0)) / total
-                r[ramp] = 1.0 - dq
-            else:
-                r[~above] = 1.0
-            res[right] = r
-
-        # between centroids
-        mid = rest & (idx > 0) & (idx < n_c)
-        if np.any(mid):
-            xv = x[mid]
-            li = idx[mid] - 1
-            ri = idx[mid]
-            ml, mr = m[li], m[ri]
-            wl, wr = w[li], w[ri]
-            gap = mr - ml
-            dw_center = 0.5 * (wl + wr)
-            degenerate = gap <= 0.0
-            left_excl = np.where(kinds[li] == KIND_ATOMIC, wl * 0.5, 0.0)
-            right_excl = np.where(kinds[ri] == KIND_ATOMIC, wr * 0.5, 0.0)
-            dw_span = dw_center - left_excl - right_excl
-            base = prefix[li] + wl * 0.5 + left_excl
-            frac = np.where(degenerate, 0.0, (xv - ml) / np.where(gap <= 0, 1.0, gap))
-            val = (base + dw_span * frac) / total
-            val = np.where(degenerate, (prefix[li] + dw_center) / total, val)
-            res[mid] = val
-
-        out[ok] = res
-        return out
+        return DigestBatch.of(self).cdf(0, vals)
 
     def median(self) -> float:
         """Median with the even-count branch (quantile.rs:219-233)."""
-        total = self.count
-        if total <= 0.0:
-            return math.nan
-        if int(total) % 2 != 0:
-            return self.quantile(0.5)
-        li, ri = self._bracket_for_median()
-        return 0.5 * (float(self.means64[li]) + float(self.means64[ri]))
-
-    def _bracket_for_median(self) -> Tuple[int, int]:
-        m = self.means64
-        n_c = m.size
-        if n_c == 1:
-            return 0, 0
-        total = self.count
-        if n_c == 2 or total <= 2.0:
-            return 0, 1
-        index = 0.5 * total
-        if index < 1.0:
-            return 0, 1
-        if index > total - 1.0:
-            return n_c - 2, n_c - 1
-        w = self.weights64
-        prefix = np.concatenate(([0.0], np.cumsum(w)))[:-1]
-        centers = prefix + 0.5 * w
-        li = int(np.searchsorted(centers[1:], index, side="right"))
-        li = min(li, n_c - 2)
-        return li, li + 1
+        return float(DigestBatch.of(self).median(0)[0])
 
     def trimmed_mean(self, lower: float, upper: float) -> float:
         """Weight-proportional mean of mass in [lower, upper] quantile
@@ -1061,3 +867,335 @@ def _edge_run_len(kinds: np.ndarray, k: int, from_left: bool) -> int:
 def _ensure_scale_factor(factor: float) -> None:
     if not (math.isfinite(factor) and factor > 0.0):
         raise ValueError("scale factor must be finite and > 0")
+
+
+@dataclass
+class DigestBatch:
+    """Many digests as flat columns — the read side's unit of work.
+
+    Digest ``i`` owns centroids ``offsets[i]:offsets[i+1]`` of the
+    concatenated f64 ``means`` / ``weights`` and u8 ``kinds``, holding
+    the values ``TDigest.means64`` / ``weights64`` / ``kinds`` would
+    (already rounded to the digest's storage precision). ``n``,
+    ``count``, ``sum``, ``min``, ``max`` and ``precision`` are
+    per-digest header columns; ``rows`` maps each input row to its
+    digest, so identical blobs share one digest. ``wire.decode_batch``
+    builds a batch from a column of TDIG blobs (a header-only batch has
+    no centroid columns: ``means``, ``weights``, ``kinds`` and
+    ``offsets`` are None), ``DigestBatch.of`` from one ``TDigest``.
+
+    The query kernels take a digest index and a probe per row; either
+    may be a scalar, which broadcasts. Prefix sums come from a row-wise
+    ``cumsum`` over a padded (digests × max centroids) matrix — the same
+    sequential accumulation a per-digest ``cumsum`` makes — so every
+    answer is bit-identical to querying each digest on its own.
+    """
+
+    means: Optional[np.ndarray]
+    weights: Optional[np.ndarray]
+    kinds: Optional[np.ndarray]
+    offsets: Optional[np.ndarray]
+    n: np.ndarray
+    count: np.ndarray
+    sum: np.ndarray
+    min: np.ndarray
+    max: np.ndarray
+    precision: np.ndarray
+    rows: np.ndarray
+
+    @classmethod
+    def of(cls, td: "TDigest") -> "DigestBatch":
+        """One digest as a batch of one (the ``TDigest`` query methods)."""
+        n = len(td)
+        return cls(
+            means=td.means64, weights=td.weights64, kinds=td.kinds,
+            offsets=np.asarray([0, n], dtype=np.int64),
+            n=np.asarray([n], dtype=np.int64),
+            count=np.asarray([td.count], dtype=np.float64),
+            sum=np.asarray([td.sum], dtype=np.float64),
+            min=np.asarray([td.min], dtype=np.float64),
+            max=np.asarray([td.max], dtype=np.float64),
+            precision=np.asarray([td.precision]),
+            rows=np.zeros(1, dtype=np.int64),
+        )
+
+    @property
+    def empty(self) -> np.ndarray:
+        """Per digest: zero count OR no centroids (tdigest.rs:344-347)."""
+        return (self.count == 0.0) | (self.n == 0)
+
+    @cached_property
+    def _prefix(self) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Flat (exclusive prefix, centroid center, inclusive prefix) of
+        the weights, each digest accumulated on its own. The padded
+        matrix is built per chunk of digests to bound its memory."""
+        w = self.weights
+        incl = np.empty_like(w)
+        for lo in range(0, self.n.size, _PREFIX_CHUNK):
+            n = self.n[lo:lo + _PREFIX_CHUNK]
+            seg = slice(self.offsets[lo], self.offsets[lo + n.size])
+            pad = np.arange(n.max(initial=0)) < n[:, None]
+            mat = np.zeros(pad.shape)
+            mat[pad] = w[seg]
+            np.cumsum(mat, axis=1, out=mat)
+            incl[seg] = mat[pad]
+        prefix = np.empty_like(incl)
+        prefix[1:] = incl[:-1]
+        prefix[self.offsets[:-1][self.n > 0]] = 0.0
+        return prefix, prefix + 0.5 * w, incl
+
+    def quantile(self, digest, q) -> np.ndarray:
+        """Quantile of digest ``digest[i]`` at ``q[i]``, with half-weight
+        bracketing and singleton-aware interpolation
+        (quantile.rs:47-188). NaN q → NaN; no centroids → NaN; finite q
+        clamped to [0,1]."""
+        d, qs = _rows(digest, q)
+        out = np.full(qs.size, np.nan)
+        nan_mask = np.isnan(qs)
+        n_c = self.n[d]
+        one = (n_c == 1) & ~nan_mask
+        if np.any(one):
+            out[one] = self.means[self.offsets[d[one]]]
+        multi = np.flatnonzero((n_c >= 2) & ~nan_mask)
+        if not multi.size:
+            return out
+        d = d[multi]
+        total = self.count[d]
+        index = np.clip(qs[multi], 0.0, 1.0) * total
+        res = np.empty(multi.size)
+        lo_mask = index < 1.0
+        hi_mask = index > total - 1.0
+        res[lo_mask] = self.min[d[lo_mask]]
+        res[hi_mask] = self.max[d[hi_mask]]
+        mid_mask = ~(lo_mask | hi_mask)
+        if np.any(mid_mask):
+            res[mid_mask] = self._interpolate(d[mid_mask], index[mid_mask])
+        out[multi] = res
+        return out
+
+    def _interpolate(self, d: np.ndarray, idx: np.ndarray) -> np.ndarray:
+        m, w = self.means, self.weights
+        _, centers, _ = self._prefix
+        start = self.offsets[d]
+        n_c = self.n[d]
+        # left bracket: last i with centers[i+1] <= index, clamped to n-2
+        li = start + np.minimum(
+            _search(centers, start + 1, n_c - 1, idx, "right",
+                    self.n.size == 1),
+            n_c - 2,
+        )
+        ri = li + 1
+
+        wl, wr = w[li], w[ri]
+        ml, mr = m[li], m[ri]
+        cl = centers[li]
+        cr = centers[ri]
+        atomic_l = self.kinds[li] == KIND_ATOMIC
+        atomic_r = self.kinds[ri] == KIND_ATOMIC
+
+        res = np.empty(idx.size)
+        done = np.zeros(idx.size, dtype=bool)
+
+        # atomic-pile snap (strictly inside half-width)
+        pile_l = atomic_l & (wl > 1.0) & (cl - wl / 2.0 < idx) & (idx < cl + wl / 2.0)
+        res[pile_l] = ml[pile_l]
+        done |= pile_l
+        pile_r = (
+            ~done
+            & atomic_r
+            & (wr > 1.0)
+            & (cr - wr / 2.0 < idx)
+            & (idx < cr + wr / 2.0)
+        )
+        res[pile_r] = mr[pile_r]
+        done |= pile_r
+
+        # unit-singleton snap (±0.5 of center) — weight-based like reference
+        snap_l = ~done & (wl == 1.0) & ((idx - cl) < 0.5)
+        res[snap_l] = ml[snap_l]
+        done |= snap_l
+        snap_r = ~done & (wr == 1.0) & ((cr - idx) < 0.5)
+        res[snap_r] = mr[snap_r]
+        done |= snap_r
+
+        # linear interpolation with unit-singleton dead zones.  The
+        # reference *guarantees* quantile is monotone in q
+        # (quantile.rs:8-33), so the lerp must be monotone in floats too:
+        #  - denom is computed idx-independently ((cr-cl)-dead, NOT
+        #    toward_r+toward_l, which wobbles by an ulp as idx moves),
+        #    making t = toward_r/denom monotone in idx (IEEE ops with one
+        #    constant operand are monotone);
+        #  - the result is clamped into the [ml, mr] bracket, whose
+        #    endpoints are themselves monotone across brackets, so a
+        #    1-ulp overshoot can never produce a dip at a bracket edge.
+        dead_l = np.where(wl == 1.0, 0.5, 0.0)
+        dead_r = np.where(wr == 1.0, 0.5, 0.0)
+        toward_r = idx - cl - dead_l
+        denom = (cr - cl) - dead_l - dead_r
+        pos = denom > 0.0
+        t = np.clip(
+            np.where(pos, toward_r / np.where(pos, denom, 1.0), 0.5),
+            0.0,
+            1.0,
+        )
+        interp = np.clip(
+            np.where(pos, ml + (mr - ml) * t, 0.5 * (ml + mr)), ml, mr
+        )
+        res[~done] = interp[~done]
+        return res
+
+    def cdf(self, digest, x) -> np.ndarray:
+        """CDF of digest ``digest[i]`` at ``x[i]`` (cdf.rs:61-203). Empty
+        digest → NaN; NaN probe → NaN; below min → 0; above max → 1."""
+        d, xs = _rows(digest, x)
+        out = np.full(xs.size, np.nan)
+        live = np.flatnonzero(~self.empty[d] & ~np.isnan(xs))
+        if not live.size:
+            return out
+        d = d[live]
+        x = xs[live]
+        m, w = self.means, self.weights
+        prefix, _, incl = self._prefix
+        start = self.offsets[d]
+        n_c = self.n[d]
+        total = incl[start + n_c - 1]
+        min_v, max_v = self.min[d], self.max[d]
+        res = np.empty(x.size)
+
+        idx = _search(m, start, n_c, x, "left", self.n.size == 1)
+        exact = idx < n_c
+        exact[exact] = m[(start + idx)[exact]] == x[exact]
+
+        # exact centroid hit: midpoint mass
+        ei = (start + idx)[exact]
+        res[exact] = (prefix[ei] + 0.5 * w[ei]) / total[exact]
+
+        rest = ~exact
+        # left tail: idx == 0
+        left = rest & (idx == 0)
+        if np.any(left):
+            xv, tl, mn = x[left], total[left], min_v[left]
+            m0, w0 = m[start[left]], w[start[left]]
+            gap = m0 - mn
+            r = np.zeros(xv.size)  # below min, or no gap
+            ramp = (gap > 0.0) & ~(xv < mn)
+            at_min = ramp & (xv == mn)
+            r[at_min] = 0.5 / tl[at_min]
+            ramp &= ~at_min
+            r[ramp] = (
+                1.0 + (xv[ramp] - mn[ramp]) / gap[ramp] * (w0[ramp] / 2.0 - 1.0)
+            ) / tl[ramp]
+            res[left] = r
+
+        # right tail: idx == n_c
+        right = rest & (idx == n_c)
+        if np.any(right):
+            xv, tr, mx = x[right], total[right], max_v[right]
+            last = start[right] + n_c[right] - 1
+            mn_, wn_ = m[last], w[last]
+            gap = mx - mn_
+            r = np.ones(xv.size)  # above max, or no gap
+            ramp = (gap > 0.0) & ~(xv > mx)
+            at_max = ramp & (xv == mx)
+            r[at_max] = 1.0 - 0.5 / tr[at_max]
+            ramp &= ~at_max
+            dq = (
+                1.0 + (mx[ramp] - xv[ramp]) / gap[ramp] * (wn_[ramp] / 2.0 - 1.0)
+            ) / tr[ramp]
+            r[ramp] = 1.0 - dq
+            res[right] = r
+
+        # between centroids
+        mid = rest & (idx > 0) & (idx < n_c)
+        if np.any(mid):
+            xv, tm = x[mid], total[mid]
+            ri = (start + idx)[mid]
+            li = ri - 1
+            ml, mr = m[li], m[ri]
+            wl, wr = w[li], w[ri]
+            gap = mr - ml
+            dw_center = 0.5 * (wl + wr)
+            degenerate = gap <= 0.0
+            left_excl = np.where(self.kinds[li] == KIND_ATOMIC, wl * 0.5, 0.0)
+            right_excl = np.where(self.kinds[ri] == KIND_ATOMIC, wr * 0.5, 0.0)
+            dw_span = dw_center - left_excl - right_excl
+            base = prefix[li] + wl * 0.5 + left_excl
+            frac = np.where(degenerate, 0.0, (xv - ml) / np.where(gap <= 0, 1.0, gap))
+            val = (base + dw_span * frac) / tm
+            val = np.where(degenerate, (prefix[li] + dw_center) / tm, val)
+            res[mid] = val
+
+        out[live] = res
+        return out
+
+    def median(self, digest) -> np.ndarray:
+        """Median of each digest in ``digest``, with the even-count
+        branch (quantile.rs:219-233): an odd integer part of the count
+        takes quantile(0.5), an even one the mean of the two centroids
+        bracketing count/2. Empty → NaN."""
+        d = np.asarray(digest, dtype=np.int64).ravel()
+        total = self.count[d]
+        n_c = self.n[d]
+        out = np.full(d.size, np.nan)
+        live = (total > 0.0) & (n_c > 0)
+        odd = live & (np.fmod(np.trunc(total), 2.0) != 0.0)
+        if np.any(odd):
+            out[odd] = self.quantile(d[odd], 0.5)
+        even = np.flatnonzero(live & ~odd)
+        if not even.size:
+            return out
+        d, total, n_c = d[even], total[even], n_c[even]
+        li = np.zeros(even.size, dtype=np.int64)
+        ri = (n_c > 1).astype(np.int64)  # (0, 0) for one centroid, else (0, 1)
+        index = 0.5 * total
+        inner = (n_c > 2) & (total > 2.0) & ~(index < 1.0)
+        top = inner & (index > total - 1.0)
+        li[top] = n_c[top] - 2
+        ri[top] = n_c[top] - 1
+        inner &= ~top
+        if np.any(inner):
+            _, centers, _ = self._prefix
+            s = self.offsets[d[inner]]
+            li[inner] = np.minimum(
+                _search(centers, s + 1, n_c[inner] - 1, index[inner],
+                        "right", self.n.size == 1),
+                n_c[inner] - 2,
+            )
+            ri[inner] = li[inner] + 1
+        start = self.offsets[d]
+        out[even] = 0.5 * (self.means[start + li] + self.means[start + ri])
+        return out
+
+
+def _rows(digest, probe) -> Tuple[np.ndarray, np.ndarray]:
+    """Flat per-row (digest index, probe) arrays; a scalar broadcasts."""
+    d = np.asarray(digest, dtype=np.int64)
+    p = np.asarray(probe, dtype=np.float64)
+    if d.ndim == 0:
+        d = np.full(p.shape, d)
+    elif d.shape != p.shape:
+        d, p = np.broadcast_arrays(d, p)
+    return d.ravel(), p.ravel()
+
+
+def _search(a: np.ndarray, start: np.ndarray, length: np.ndarray,
+            x: np.ndarray, side: str, one_segment: bool) -> np.ndarray:
+    """Per row, ``np.searchsorted(a[start:start+length], x, side)`` over
+    sorted segments of the flat array ``a`` — one vectorized binary
+    search for all rows. When every row searches the same segment
+    (``one_segment``), one ``np.searchsorted`` call gives the same
+    answer at a fraction of the fixed cost."""
+    if one_segment:
+        s = int(start[0])
+        return np.searchsorted(a[s:s + int(length[0])], x, side=side)
+    lo = np.zeros(x.size, dtype=np.int64)
+    hi = np.asarray(length, dtype=np.int64).copy()
+    act = np.flatnonzero(lo < hi)
+    while act.size:
+        mid = (lo[act] + hi[act]) >> 1
+        v = a[start[act] + mid]
+        go = (v <= x[act]) if side == "right" else (v < x[act])
+        lo[act[go]] = mid[go] + 1
+        hi[act[~go]] = mid[~go]
+        act = act[lo[act] < hi[act]]
+    return lo

@@ -48,9 +48,11 @@ from typing import Tuple
 
 import numpy as np
 
-from gr_tdigest_spark.sketches.tdigest import TDigest, KIND_ATOMIC, KIND_MIXED
+from gr_tdigest_spark.sketches.tdigest import (
+    DigestBatch, TDigest, KIND_ATOMIC, KIND_MIXED,
+)
 
-__all__ = ["encode", "decode", "wire_precision", "WireError"]
+__all__ = ["encode", "decode", "decode_batch", "wire_precision", "WireError"]
 
 MAGIC = b"TDIG"
 HEADER_LEN_V12 = 56
@@ -356,6 +358,185 @@ def _decode_v3(blob: bytes) -> TDigest:
         precision, scale_code, policy_code, pin, int(max_size),
         total_weight, mn, mx, data_sum, means, w, kinds,
     )
+
+
+# v3 header fields read by decode_batch (layout in the module docstring)
+_V3_FIELDS = [  # (name, format, offset)
+    ("flags", "u1", 5), ("header_len", "u1", 6), ("precision", "u1", 7),
+    ("scale", "u1", 8), ("policy", "u1", 9), ("pin", "u1", 10),
+    ("count", "<f8", 20), ("min", "<f8", 28), ("max", "<f8", 36),
+    ("n", "<u8", 44), ("sum", "<f8", 52), ("crc", "<u4", 60),
+]
+_HEADER_V3 = np.dtype({
+    "names": [f[0] for f in _V3_FIELDS],
+    "formats": [f[1] for f in _V3_FIELDS],
+    "offsets": [f[2] for f in _V3_FIELDS],
+    "itemsize": HEADER_LEN_V3,
+})
+_PAYLOAD_V3 = {
+    p: np.dtype({
+        "names": ["mean", "weight", "kind"],
+        "formats": [_mean_dtype(p), "<f8", "u1"],
+        "offsets": [0, _stride(3, p) - 9, _stride(3, p) - 1],
+        "itemsize": _stride(3, p),
+    })
+    for p in ("f32", "f64")
+}
+
+
+def decode_batch(blobs, header_only: bool = False) -> DigestBatch:
+    """Decode a column of TDIG blobs into one ``DigestBatch``.
+
+    Identical blobs decode once (``rows`` maps every input row to its
+    digest). v3 blobs are parsed column-wise: one structured view over
+    their joined headers, and per precision one over their joined
+    payloads; v1/v2 blobs go through ``decode`` and are spliced in. A
+    blob ``decode`` would reject — or a null — raises the error
+    ``decode`` raises for the first such row.
+
+    ``header_only`` reads just the header columns: v3 payloads, config
+    codes and checksums are not checked, and the centroid columns are
+    None.
+    """
+    index: dict = {}
+    rows = np.fromiter(
+        (index.setdefault(None if b is None else bytes(b), len(index))
+         for b in blobs),
+        dtype=np.int64,
+    )
+    keys = list(index)
+    n_dig = len(keys)
+    bad = np.zeros(n_dig, dtype=bool)
+    v3, legacy = [], []
+    for i, b in enumerate(keys):
+        version = (
+            b[4] if b is not None and len(b) >= 5 and b[:4] == MAGIC else None
+        )
+        if version == 3 and len(b) >= HEADER_LEN_V3:
+            v3.append(i)
+        elif version in (1, 2):
+            legacy.append(i)
+        else:
+            bad[i] = True
+
+    v3 = np.asarray(v3, dtype=np.int64)
+    hdr = np.frombuffer(
+        b"".join([keys[i][:HEADER_LEN_V3] for i in v3]), dtype=_HEADER_V3
+    )
+    size = np.asarray([len(keys[i]) for i in v3], dtype=np.int64)
+    hlen = hdr["header_len"].astype(np.int64)
+    f32 = hdr["precision"] == _PRECISION_CODE["f32"]
+    ok = (
+        (hlen >= HEADER_LEN_V3) & (size >= hlen)
+        & (f32 | (hdr["precision"] == _PRECISION_CODE["f64"]))
+    )
+    payloads = []
+    if not header_only:
+        # codes are dense from 0
+        ok &= (
+            (hdr["scale"] < len(_CODE_TO_SCALE))
+            & (hdr["policy"] < len(_CODE_TO_POLICY))
+            & ~((hdr["policy"] == _POLICY_TO_CODE["edges"]) & (hdr["pin"] == 0))
+        )
+        stride = np.where(f32, _stride(3, "f32"), _stride(3, "f64"))
+        plen = size - hlen
+        ok &= (plen % stride == 0) & (
+            hdr["n"] == (plen // stride).astype(np.uint64)
+        )
+        hl = hlen.tolist()
+        for j in np.flatnonzero(ok & (hdr["flags"] & V3_FLAG_CHECKSUM != 0)):
+            ok[j] = _checksum_v3(keys[v3[j]], hl[j]) == hdr["crc"][j]
+        for prec, code in _PRECISION_CODE.items():
+            sel = np.flatnonzero(ok & (hdr["precision"] == code))
+            if not sel.size:
+                continue
+            rec = np.frombuffer(
+                b"".join([keys[v3[j]][hl[j]:] for j in sel]),
+                dtype=_PAYLOAD_V3[prec],
+            )
+            w = rec["weight"]
+            cbad = (
+                (rec["kind"] > KIND_MIXED) | ~np.isfinite(rec["mean"])
+                | ~np.isfinite(w) | (w < 0)
+            )
+            owner = np.repeat(sel, hdr["n"][sel].astype(np.int64))
+            ok[owner[cbad]] = False
+            payloads.append((v3[sel], prec, rec))
+    bad[v3[~ok]] = True
+
+    legacy_td = {}
+    for i in legacy:
+        try:
+            legacy_td[i] = decode(keys[i])
+        except WireError:
+            bad[i] = True
+    if bad.any():
+        _reject(keys[int(np.flatnonzero(bad)[0])])
+
+    n = np.zeros(n_dig, dtype=np.int64)
+    count, total, mn, mx = (np.empty(n_dig) for _ in range(4))
+    precision = np.empty(n_dig, dtype="<U3")
+    n[v3] = hdr["n"]
+    count[v3] = hdr["count"]
+    total[v3] = hdr["sum"]
+    mn[v3] = hdr["min"]
+    mx[v3] = hdr["max"]
+    if f32.any():
+        with np.errstate(over="ignore"):
+            # f32 digests store min/max at f32 (TDigest._store)
+            mn[v3[f32]] = hdr["min"][f32].astype(np.float32)
+            mx[v3[f32]] = hdr["max"][f32].astype(np.float32)
+    precision[v3] = np.where(f32, "f32", "f64")
+    for i, td in legacy_td.items():
+        n[i], count[i], total[i] = len(td), td.count, td.sum
+        mn[i], mx[i], precision[i] = td.min, td.max, td.precision
+    cols = dict(
+        n=n, count=count, sum=total, min=mn, max=mx, precision=precision,
+        rows=rows,
+    )
+    if header_only:
+        return DigestBatch(
+            means=None, weights=None, kinds=None, offsets=None, **cols
+        )
+
+    offsets = np.zeros(n_dig + 1, dtype=np.int64)
+    np.cumsum(n, out=offsets[1:])
+    means = np.empty(offsets[-1])
+    weights = np.empty(offsets[-1])
+    kinds = np.empty(offsets[-1], dtype=np.uint8)
+
+    def owned(digests):
+        mask = np.zeros(n_dig, dtype=bool)
+        mask[digests] = True
+        return np.repeat(mask, n)
+
+    for digests, prec, rec in payloads:
+        at = owned(digests)
+        means[at] = rec["mean"]
+        w = rec["weight"]
+        if prec == "f32":
+            with np.errstate(over="ignore"):
+                # f32 digests store weights at f32 too (TDigest._store)
+                w = w.astype(np.float32)
+        weights[at] = w
+        kinds[at] = rec["kind"]
+    if legacy_td:
+        at = owned(list(legacy_td))
+        tds = list(legacy_td.values())
+        means[at] = np.concatenate([td.means64 for td in tds])
+        weights[at] = np.concatenate([td.weights64 for td in tds])
+        kinds[at] = np.concatenate([td.kinds for td in tds])
+    return DigestBatch(
+        means=means, weights=weights, kinds=kinds, offsets=offsets, **cols
+    )
+
+
+def _reject(blob) -> None:
+    """Raise the error ``decode`` raises for a blob the batch rejected."""
+    if blob is None:
+        raise WireError("null TDIG blob")
+    decode(blob)
+    raise AssertionError("decode_batch rejected a blob that decodes")
 
 
 def encode_pile_groups(

@@ -117,6 +117,22 @@ class TestErrorContractsAcrossSurfaces:
         with pytest.raises(Exception, match="null TDIG blob"):
             dg.select(Fn.tdigest_quantile("b", 0.5)).collect()
 
+    @pytest.mark.parametrize("blob,message", [
+        (None, "null TDIG blob"),
+        (b"TDIG\x03" + bytes(20), "buffer too small"),  # truncated v3
+    ], ids=["null", "short_v3"])
+    def test_header_stat_errors(self, spark, blob, message):
+        """Every header-only stat raises the same error: a NULL blob
+        (not TypeError), a truncated v3 header (not struct.error)."""
+        dg = spark.createDataFrame([(blob,)], "b binary")
+        for fn in (Fn.tdigest_count, Fn.tdigest_sum, Fn.tdigest_min,
+                   Fn.tdigest_max, Fn.tdigest_mean, Fn.tdigest_n_centroids,
+                   Fn.tdigest_wire_precision):
+            with pytest.raises(Exception, match=message) as err:
+                dg.select(fn("b")).collect()
+            assert "TypeError" not in str(err.value)
+            assert "struct.error" not in str(err.value)
+
     def test_empty_bytes_blob_errors(self, spark):
         dg = spark.range(1).select(F.lit(b"").alias("b"))
         with pytest.raises(Exception, match="TDIG"):
