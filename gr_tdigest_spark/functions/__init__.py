@@ -176,34 +176,28 @@ def tdigest_cdfs(col, xs: Sequence[float]) -> Column:
     return _cs(col)
 
 
-def _cdf_col_udf():
-    @F.pandas_udf(DoubleType())
-    def _c(blobs: pd.Series, xs: pd.Series) -> pd.Series:
-        b = td_wire.decode_batch(blobs)
-        xarr = xs.to_numpy(dtype=np.float64, na_value=np.nan)
-        return pd.Series(b.cdf(b.rows, xarr))
-
-    return _c
+@F.pandas_udf(DoubleType())
+def _cdf_col(blobs: pd.Series, xs: pd.Series) -> pd.Series:
+    b = td_wire.decode_batch(blobs)
+    xarr = xs.to_numpy(dtype=np.float64, na_value=np.nan)
+    return pd.Series(b.cdf(b.rows, xarr))
 
 
 def tdigest_cdf_col(digest_col, probe_col) -> Column:
     """CDF with a per-row probe column (digest ⋈ probe pattern,
     reference polars_expr.rs:920-983)."""
-    return _cdf_col_udf()(digest_col, probe_col)
+    return _cdf_col(digest_col, probe_col)
 
 
-def _median_udf():
-    @F.pandas_udf(DoubleType())
-    def _m(blobs: pd.Series) -> pd.Series:
-        b = td_wire.decode_batch(blobs)
-        return pd.Series(b.median(np.arange(b.n.size))[b.rows])
-
-    return _m
+@F.pandas_udf(DoubleType())
+def _median(blobs: pd.Series) -> pd.Series:
+    b = td_wire.decode_batch(blobs)
+    return pd.Series(b.median(np.arange(b.n.size))[b.rows])
 
 
 def tdigest_median(col) -> Column:
     """Median with even-count branch (quantile.rs:219-233); empty → null."""
-    return _median_udf()(col)
+    return _median(col)
 
 
 def tdigest_trimmed_mean(col, lower: float, upper: float) -> Column:
@@ -359,8 +353,8 @@ def register_sql(spark) -> None:
         return pd.Series(out)
 
     spark.udf.register("tdigest_quantile", _q)
-    spark.udf.register("tdigest_cdf", _cdf_col_udf())
-    spark.udf.register("tdigest_median", _median_udf())
+    spark.udf.register("tdigest_cdf", _cdf_col)
+    spark.udf.register("tdigest_median", _median)
     for name in ("count", "min", "max", "sum"):
         spark.udf.register(f"tdigest_{name}", _field_udf(name))
 

@@ -68,8 +68,9 @@ KIND_MIXED = 1
 
 _LN2 = math.log(2.0)
 
-# digests per padded prefix-sum matrix in DigestBatch (bounds its memory)
-_PREFIX_CHUNK = 4096
+# cells (digests × widest digest) per padded prefix-sum matrix in
+# DigestBatch: 8 MB of f64, whatever the digest sizes
+_PREFIX_CELLS = 1 << 20
 
 
 def q_to_k(q, d: float, family: str, n: float):
@@ -927,18 +928,29 @@ class DigestBatch:
     @cached_property
     def _prefix(self) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Flat (exclusive prefix, centroid center, inclusive prefix) of
-        the weights, each digest accumulated on its own. The padded
-        matrix is built per chunk of digests to bound its memory."""
+        the weights, each digest accumulated on its own. Digests are
+        taken in order of size and cut into chunks whose padded matrix
+        holds at most ``_PREFIX_CELLS`` cells (a digest wider than that
+        is a chunk of its own), so one large digest among many small
+        ones does not widen every row."""
         w = self.weights
         incl = np.empty_like(w)
-        for lo in range(0, self.n.size, _PREFIX_CHUNK):
-            n = self.n[lo:lo + _PREFIX_CHUNK]
-            seg = slice(self.offsets[lo], self.offsets[lo + n.size])
-            pad = np.arange(n.max(initial=0)) < n[:, None]
+        order = np.argsort(self.n, kind="stable")
+        n_sorted = self.n[order]
+        lo = 0
+        while lo < order.size:
+            # (chunk length × widest digest) grows with the chunk's end
+            cells = np.arange(1, order.size - lo + 1) * n_sorted[lo:]
+            hi = lo + max(1, int(np.searchsorted(cells, _PREFIX_CELLS, "right")))
+            n = n_sorted[lo:hi]
+            at = np.repeat(self.offsets[order[lo:hi]] - np.cumsum(n) + n, n)
+            at += np.arange(at.size)
+            pad = np.arange(n[-1]) < n[:, None]
             mat = np.zeros(pad.shape)
-            mat[pad] = w[seg]
+            mat[pad] = w[at]
             np.cumsum(mat, axis=1, out=mat)
-            incl[seg] = mat[pad]
+            incl[at] = mat[pad]
+            lo = hi
         prefix = np.empty_like(incl)
         prefix[1:] = incl[:-1]
         prefix[self.offsets[:-1][self.n > 0]] = 0.0
@@ -980,8 +992,7 @@ class DigestBatch:
         n_c = self.n[d]
         # left bracket: last i with centers[i+1] <= index, clamped to n-2
         li = start + np.minimum(
-            _search(centers, start + 1, n_c - 1, idx, "right",
-                    self.n.size == 1),
+            _search(centers, start + 1, n_c - 1, idx, "right"),
             n_c - 2,
         )
         ri = li + 1
@@ -1062,7 +1073,7 @@ class DigestBatch:
         min_v, max_v = self.min[d], self.max[d]
         res = np.empty(x.size)
 
-        idx = _search(m, start, n_c, x, "left", self.n.size == 1)
+        idx = _search(m, start, n_c, x, "left")
         exact = idx < n_c
         exact[exact] = m[(start + idx)[exact]] == x[exact]
 
@@ -1157,8 +1168,7 @@ class DigestBatch:
             _, centers, _ = self._prefix
             s = self.offsets[d[inner]]
             li[inner] = np.minimum(
-                _search(centers, s + 1, n_c[inner] - 1, index[inner],
-                        "right", self.n.size == 1),
+                _search(centers, s + 1, n_c[inner] - 1, index[inner], "right"),
                 n_c[inner] - 2,
             )
             ri[inner] = li[inner] + 1
@@ -1179,15 +1189,10 @@ def _rows(digest, probe) -> Tuple[np.ndarray, np.ndarray]:
 
 
 def _search(a: np.ndarray, start: np.ndarray, length: np.ndarray,
-            x: np.ndarray, side: str, one_segment: bool) -> np.ndarray:
+            x: np.ndarray, side: str) -> np.ndarray:
     """Per row, ``np.searchsorted(a[start:start+length], x, side)`` over
     sorted segments of the flat array ``a`` — one vectorized binary
-    search for all rows. When every row searches the same segment
-    (``one_segment``), one ``np.searchsorted`` call gives the same
-    answer at a fraction of the fixed cost."""
-    if one_segment:
-        s = int(start[0])
-        return np.searchsorted(a[s:s + int(length[0])], x, side=side)
+    search for all rows."""
     lo = np.zeros(x.size, dtype=np.int64)
     hi = np.asarray(length, dtype=np.int64).copy()
     act = np.flatnonzero(lo < hi)

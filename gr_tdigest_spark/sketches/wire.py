@@ -395,8 +395,9 @@ def decode_batch(blobs, header_only: bool = False) -> DigestBatch:
     ``decode`` raises for the first such row.
 
     ``header_only`` reads just the header columns: v3 payloads, config
-    codes and checksums are not checked, and the centroid columns are
-    None.
+    codes and checksums are not checked, the centroid columns are None,
+    and an f32 v3 blob's min/max are the raw f64 header fields (a full
+    read rounds them to f32, as ``decode`` does).
     """
     index: dict = {}
     rows = np.fromiter(
@@ -481,11 +482,6 @@ def decode_batch(blobs, header_only: bool = False) -> DigestBatch:
     total[v3] = hdr["sum"]
     mn[v3] = hdr["min"]
     mx[v3] = hdr["max"]
-    if f32.any():
-        with np.errstate(over="ignore"):
-            # f32 digests store min/max at f32 (TDigest._store)
-            mn[v3[f32]] = hdr["min"][f32].astype(np.float32)
-            mx[v3[f32]] = hdr["max"][f32].astype(np.float32)
     precision[v3] = np.where(f32, "f32", "f64")
     for i, td in legacy_td.items():
         n[i], count[i], total[i] = len(td), td.count, td.sum
@@ -498,6 +494,12 @@ def decode_batch(blobs, header_only: bool = False) -> DigestBatch:
         return DigestBatch(
             means=None, weights=None, kinds=None, offsets=None, **cols
         )
+    if f32.any():
+        with np.errstate(over="ignore"):
+            # f32 digests store min/max at f32 (TDigest._store); the
+            # header-only read keeps the raw header fields
+            mn[v3[f32]] = hdr["min"][f32].astype(np.float32)
+            mx[v3[f32]] = hdr["max"][f32].astype(np.float32)
 
     offsets = np.zeros(n_dig + 1, dtype=np.int64)
     np.cumsum(n, out=offsets[1:])

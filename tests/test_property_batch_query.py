@@ -16,13 +16,14 @@ decoder raises ``wire.decode``'s error for every malformed blob.
 import math
 import os
 import struct
+import tracemalloc
 from typing import Tuple
 
 import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
-from gr_tdigest_spark.sketches import wire
+from gr_tdigest_spark.sketches import tdigest, wire
 from gr_tdigest_spark.sketches.tdigest import KIND_ATOMIC, TDigest
 
 _SCALE = max(int(os.environ.get("HYP_EXAMPLES_SCALE", "1")), 1)
@@ -409,7 +410,7 @@ def test_batch_header_columns_match_decode(rows, header_only):
 def test_f32_blob_fields_round_like_decode():
     """An f32 v3 blob whose f64 weight and min/max fields hold values f32
     cannot: the batch rounds them exactly as a decoded digest stores
-    them."""
+    them, and a header-only read keeps the raw header min/max."""
     td = TDigest.from_weighted([1.0, 2.0, 3.0], [1.0, 2.0, 3.0],
                                max_size=10, precision="f32")
     b = bytearray(wire.encode(td))
@@ -427,13 +428,14 @@ def test_f32_blob_fields_round_like_decode():
     xs = np.linspace(0.5, 3.5, 13)
     _same_bits(batch.cdf(np.ones(xs.size, dtype=int), xs),
                oracle_cdf(want, xs))
+    # the header-only read returns the raw f64 header fields
+    head = wire.decode_batch([_GOOD, blob], header_only=True)
+    _same_bits([head.min[1], head.max[1]], [0.9999999, 3.0000001])
 
 
 def test_prefix_chunks_join_exactly(monkeypatch):
     """The padded prefix sums are built per chunk of digests; answers
     must not depend on where the chunks split."""
-    from gr_tdigest_spark.sketches import tdigest
-
     rng = np.random.default_rng(5)
     rows = [wire.encode(TDigest.from_values(
         np.round(rng.normal(0, 5, int(k)), 1), max_size=20))
@@ -441,12 +443,40 @@ def test_prefix_chunks_join_exactly(monkeypatch):
     tds = [wire.decode(r) for r in rows]
     qs = rng.uniform(0, 1, len(rows))
     xs = rng.normal(0, 5, len(rows))
-    monkeypatch.setattr(tdigest, "_PREFIX_CHUNK", 3)
+    monkeypatch.setattr(tdigest, "_PREFIX_CELLS", 40)
     batch = wire.decode_batch(rows)
     _same_bits(batch.quantile(batch.rows, qs),
                [oracle_quantile(td, q) for td, q in zip(tds, qs)])
     _same_bits(batch.cdf(batch.rows, xs),
                [oracle_cdf(td, [x])[0] for td, x in zip(tds, xs)])
+
+
+def test_prefix_matrix_bounded_by_cells():
+    """One max_size=20000 digest among many one-centroid digests: the
+    padded prefix matrix stays within its cell budget instead of giving
+    every small digest a row as wide as the large one (1001 × 20000
+    f64 cells would be 160 MB)."""
+    rng = np.random.default_rng(11)
+    big = TDigest.from_values(rng.normal(size=20_000), max_size=20_000)
+    assert len(big) == 20_000
+    small = [TDigest.from_values([float(v)]) for v in rng.normal(size=1000)]
+    tds = small[:500] + [big] + small[500:]
+    batch = wire.decode_batch([wire.encode(td) for td in tds])
+    tracemalloc.start()
+    try:
+        batch._prefix
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= 3 * 8 * tdigest._PREFIX_CELLS
+    qs = rng.uniform(0, 1, len(tds))
+    xs = rng.normal(size=len(tds))
+    _same_bits(batch.quantile(batch.rows, qs),
+               [oracle_quantile(td, q) for td, q in zip(tds, qs)])
+    _same_bits(batch.cdf(batch.rows, xs),
+               [oracle_cdf(td, [x])[0] for td, x in zip(tds, xs)])
+    _same_bits(batch.median(batch.rows),
+               [oracle_median_or_nan(td) for td in tds])
 
 
 def test_empty_batch():
