@@ -288,10 +288,11 @@ def tdigest_wire_precision(col) -> Column:
 # digest → digest transforms
 # ---------------------------------------------------------------------- #
 
-def _transform_udf(fn):
+def _transform_udf(fn, version: int = 3):
+    """Digest → digest UDF: decode, ``fn``, encode at wire ``version``."""
     @F.pandas_udf(BinaryType())
     def _t(blobs: pd.Series) -> pd.Series:
-        return _map_blobs(blobs, lambda td: td_wire.encode(fn(td)))
+        return _map_blobs(blobs, lambda td: td_wire.encode(fn(td), version))
 
     return _t
 
@@ -311,25 +312,12 @@ def tdigest_scale_values(col, factor: float) -> Column:
 def tdigest_cast_precision(col, precision: str) -> Column:
     """Explicit f32⇄f64 cast (tdigest.rs:383-406)."""
     p = validation.coerce_precision(precision)
-
-    @F.pandas_udf(BinaryType())
-    def _c(blobs: pd.Series) -> pd.Series:
-        return _map_blobs(
-            blobs, lambda td: td_wire.encode(td.cast_precision(p))
-        )
-
-    return _c(col)
+    return _transform_udf(lambda td: td.cast_precision(p))(col)
 
 
 def tdigest_to_version(col, version: int) -> Column:
     """Re-encode blobs at an explicit wire version (1|2|3)."""
-    v = int(version)
-
-    @F.pandas_udf(BinaryType())
-    def _enc(blobs: pd.Series) -> pd.Series:
-        return _map_blobs(blobs, lambda td: td_wire.encode(td, v))
-
-    return _enc(col)
+    return _transform_udf(lambda td: td, int(version))(col)
 
 
 def register_sql(spark) -> None:

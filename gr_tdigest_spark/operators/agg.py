@@ -44,6 +44,9 @@ from pyspark.sql.types import (
 )
 
 from gr_tdigest_spark import validation
+from gr_tdigest_spark.operators.probe import (
+    _canon_key, _canon_key_tuple, canon_key_col, key_codes,
+)
 from gr_tdigest_spark.sketches import wire as td_wire
 from gr_tdigest_spark.sketches.tdigest import TDigest
 
@@ -64,29 +67,6 @@ def _keyed_blob_frame(
     data[out_col] = list(blobs)
     return pd.DataFrame(data, columns=key_cols + [out_col])
 
-
-def _canon_key(v):
-    """Canonicalize one group-key scalar for dict identity.
-
-    Spark NULLs in numeric key columns cross the Arrow/pandas boundary as
-    float NaN, and NaN never compares equal to itself (Python ≥3.10 even
-    hashes NaN by identity) — so NaN-bearing key tuples would keep one
-    dict entry per partial instead of merging. Map every missing-ish
-    scalar (None / NaN / NaT) to None. Note: this conflates SQL NULL with
-    a literal float('nan') key — pandas cannot distinguish them anyway.
-    """
-    if v is None:
-        return None
-    try:
-        if v != v:  # NaN / NaT
-            return None
-    except (TypeError, ValueError):
-        pass
-    return v
-
-
-def _canon_key_tuple(t) -> tuple:
-    return tuple(_canon_key(v) for v in t)
 
 # A group whose total weight N satisfies N < factor·max_size provably
 # produces ZERO k-limit merges (stage 3), because the minimum adjacent
@@ -265,25 +245,9 @@ class TDigestSpec(SketchSpec):
             np.asarray(pdf[weight_col].to_numpy(), dtype=np.float64)
             if weight_col else None
         )
-        if self.on_invalid == "drop" and key_cols:
-            # row-filtering changes key alignment; use the generic
-            # per-group path for this rare mode
-            return super().build_groups(pdf, key_cols, value_col, weight_col)
-        if key_cols:
-            keys_frame = pdf[key_cols]
-            if len(key_cols) == 1:
-                codes, uniques = pd.factorize(
-                    keys_frame[key_cols[0]], use_na_sentinel=False
-                )
-                key_tuples = [(_canon_key(u),) for u in uniques]
-            else:
-                codes, uniques = pd.factorize(
-                    pd.MultiIndex.from_frame(keys_frame), use_na_sentinel=False
-                )
-                key_tuples = [_canon_key_tuple(u) for u in uniques]
-        else:
-            codes = np.zeros(vals.size, dtype=np.int64)
-            key_tuples = [()]
+        codes, key_tuples = key_codes(
+            [pdf[k] for k in key_cols], vals.size
+        )
         return self.build_from_codes(codes, key_tuples, vals, ws)
 
     def _prepare_runs(
@@ -294,8 +258,12 @@ class TDigestSpec(SketchSpec):
         ws: Optional[np.ndarray],
     ):
         """Shared preprocessing for the vectorized builders: validate/
-        clean, one lexsort over (key code, value), one reduceat pass for
-        pile coalescing. Returns None when no rows survive."""
+        clean (``on_invalid='drop'`` filters codes along with values),
+        one lexsort over (key code, value), one reduceat pass for pile
+        coalescing, and per group its run range, total weight, ∑w·mean
+        and whether it is a no-merge group. Returns None when no rows
+        survive, else ``(run_means, run_weights, bounds, counts, sums,
+        fast)`` — group g owns runs ``bounds[g]:bounds[g + 1]``."""
         if self.on_invalid == "drop":
             keep = np.isfinite(np.asarray(vals, dtype=np.float64))
             if ws is not None:
@@ -319,11 +287,7 @@ class TDigestSpec(SketchSpec):
         order = np.lexsort((vals, codes))
         sc = codes[order]
         sv = vals[order]
-        sw = ws[order] if ws is not None else None
-
-        group_bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-
-        w_all = sw if sw is not None else np.ones(sv.size)
+        w_all = ws[order] if ws is not None else np.ones(sv.size)
         # coalesce equal (group, value) runs globally
         new_run = np.empty(sv.size, dtype=bool)
         new_run[0] = True
@@ -332,14 +296,38 @@ class TDigestSpec(SketchSpec):
         run_starts = np.flatnonzero(new_run)
         run_means = sv[run_starts]
         run_weights = np.add.reduceat(w_all, run_starts)
-        # per-group run ranges
-        run_group = sc[run_starts]
-        grp_run_bounds = np.searchsorted(
-            run_group, np.arange(n_groups + 1)
+        bounds = np.searchsorted(sc[run_starts], np.arange(n_groups + 1))
+
+        # group totals: ONE whole-array reduceat over the non-empty
+        # groups' run segments (contiguous — an empty group owns no
+        # runs). Both builders read these, so their count / data_sum
+        # headers agree bit for bit (reduceat sums pairwise, so the
+        # bits depend on exactly which elements a segment holds).
+        n_distinct = np.diff(bounds)
+        valid = n_distinct > 0
+        starts = bounds[:-1][valid]
+        counts = np.zeros(n_groups)
+        sums = np.zeros(n_groups)
+        counts[valid] = np.add.reduceat(run_weights, starts)
+        sums[valid] = np.add.reduceat(run_means * run_weights, starts)
+        fast = (
+            valid
+            & (counts < _NO_MERGE_FACTOR.get(self.scale, 0.0) * 0.99
+               * self.max_size)
+            & (n_distinct <= self.max_size)
         )
-        return (
-            sw, w_all, group_bounds, run_means, run_weights, grp_run_bounds
-        )
+        if ws is not None:  # unit weights are always ≥ 1
+            min_w = np.ones(n_groups)
+            min_w[valid] = np.minimum.reduceat(run_weights, starts)
+            fast &= min_w >= 1.0
+        return run_means, run_weights, bounds, counts, sums, fast
+
+    def _compressed(self, run_means, run_weights) -> TDigest:
+        """A group over the no-merge bound: the kernel pipeline on its
+        piles (already sorted + coalesced: ≤ distinct-count items)."""
+        td = self._empty()
+        td._compress(run_means, run_weights)
+        return td
 
     def build_from_codes(
         self,
@@ -354,46 +342,18 @@ class TDigestSpec(SketchSpec):
         prep = self._prepare_runs(codes, len(key_tuples), vals, ws)
         if prep is None:
             return out
-        (sw, w_all, group_bounds, run_means, run_weights,
-         grp_run_bounds) = prep
-        no_merge_factor = _NO_MERGE_FACTOR.get(self.scale, 0.0) * 0.99
-
+        run_means, run_weights, bounds, counts, sums, fast = prep
         for gi, key in enumerate(key_tuples):
-            r0, r1 = grp_run_bounds[gi], grp_run_bounds[gi + 1]
+            r0, r1 = bounds[gi], bounds[gi + 1]
             if r1 <= r0:
                 continue
-            n_distinct = r1 - r0
-            g0, g1 = group_bounds[gi], group_bounds[gi + 1]
-            # sequential sum over RUN weights — identical operands and
-            # association to the columnar path's reduceat counts
-            total_w = (
-                float(np.add.reduceat(run_weights[r0:r1], [0])[0])
-                if sw is not None else float(g1 - g0)
-            )
-            if (
-                total_w < no_merge_factor * self.max_size
-                and n_distinct <= self.max_size
-                and (sw is None or bool(np.all(run_weights[r0:r1] >= 1.0)))
-            ):
-                # ∑w·mean via np.add.reduceat — the SAME strictly
-                # sequential association build_blobs_from_codes uses
-                # (np.dot/np.add.reduce are pairwise/BLAS-ordered), so
-                # the two partial paths emit bit-identical data_sum
-                # headers and tdigest_sum cannot depend on which path a
-                # partition happened to take (r2 advice)
+            if fast[gi]:
                 td = self._pile_digest(
-                    run_means[r0:r1].copy(),
-                    run_weights[r0:r1].copy(),
-                    total_w,
-                    float(np.add.reduceat(
-                        run_means[r0:r1] * run_weights[r0:r1], [0]
-                    )[0]),
+                    run_means[r0:r1].copy(), run_weights[r0:r1].copy(),
+                    float(counts[gi]), float(sums[gi]),
                 )
             else:
-                td = self._empty()
-                # piles are already sorted+coalesced: run the pipeline on
-                # them instead of the raw rows (≤ distinct-count items)
-                td._compress(run_means[r0:r1], run_weights[r0:r1])
+                td = self._compressed(run_means[r0:r1], run_weights[r0:r1])
             prev = out.get(key)
             # canonicalized keys can collide (None vs NaN in an object
             # key column) — merge, never overwrite
@@ -412,51 +372,16 @@ class TDigestSpec(SketchSpec):
         dict. No-merge groups (the common case at high key cardinality:
         many small groups) go through the vectorized multi-group encoder
         (wire.encode_pile_groups); groups that need compression fall
-        back to the kernel. Returns (keys, blobs) for non-empty groups.
-
-        Group count/sum here come from reduceat over the run arrays —
-        same values as the per-key np.sum/np.dot of the states path up
-        to summation order (integer-weight counts are exact either way).
-        """
+        back to the kernel. Returns (keys, blobs) for non-empty groups,
+        byte-identical to encoding ``build_from_codes``' states."""
         prep = self._prepare_runs(codes, len(key_tuples), vals, ws)
         if prep is None:
             return [], []
-        (sw, w_all, group_bounds, run_means, run_weights,
-         grp_run_bounds) = prep
-        n_groups = len(key_tuples)
-        nruns = run_means.size
-
-        b0 = grp_run_bounds[:-1]
-        b1 = grp_run_bounds[1:]
-        valid = b1 > b0
-        # reduceat with a sentinel element: trailing empty groups index
-        # the sentinel (identity for add/min) instead of clipping into —
-        # and truncating — the last real group's segment
-        idx = np.minimum(b0, nruns)
-        counts = np.add.reduceat(np.append(run_weights, 0.0), idx)
-        sums = np.add.reduceat(
-            np.append(run_means * run_weights, 0.0), idx
-        )
-        counts = np.where(valid, counts, 0.0)
-        sums = np.where(valid, sums, 0.0)
-        n_distinct = b1 - b0
-        if sw is not None:
-            min_w = np.minimum.reduceat(np.append(run_weights, np.inf), idx)
-            all_ge1 = np.where(valid, min_w >= 1.0, False)
-        else:
-            all_ge1 = valid  # unit weights are always ≥ 1
-        no_merge_factor = _NO_MERGE_FACTOR.get(self.scale, 0.0) * 0.99
-        fast = (
-            valid
-            & (counts < no_merge_factor * self.max_size)
-            & (n_distinct <= self.max_size)
-            & all_ge1
-        )
-
+        run_means, run_weights, bounds, counts, sums, fast = prep
         # slow groups get a pile blob too (ignored below) — they are
         # rare by construction, the wasted header/crc is negligible
         blobs = td_wire.encode_pile_groups(
-            run_means, run_weights, grp_run_bounds, counts, sums,
+            run_means, run_weights, bounds, counts, sums,
             max_size=self.max_size, scale=self.scale, policy=self.policy,
             pin_per_side=self.pin_per_side, precision=self.precision,
         )
@@ -464,14 +389,12 @@ class TDigestSpec(SketchSpec):
             return list(key_tuples), blobs
         out_keys, out_blobs = [], []
         for gi, key in enumerate(key_tuples):
+            r0, r1 = bounds[gi], bounds[gi + 1]
             if fast[gi]:
                 out_keys.append(key)
                 out_blobs.append(blobs[gi])
-            elif valid[gi]:
-                td = self._empty()
-                td._compress(
-                    run_means[b0[gi]:b1[gi]], run_weights[b0[gi]:b1[gi]]
-                )
+            elif r1 > r0:
+                td = self._compressed(run_means[r0:r1], run_weights[r0:r1])
                 out_keys.append(key)
                 out_blobs.append(td_wire.encode(td, 3))
         return out_keys, out_blobs
@@ -482,9 +405,11 @@ class TDigestSpec(SketchSpec):
 # --------------------------------------------------------------------- #
 
 def _encode_batch_keys(batch, key_cols: List[str]):
-    """Dictionary-encode the key columns of an Arrow batch WITHOUT
-    materializing Python objects per row: returns (local_codes int64,
-    local_key_tuples). Nulls get their own dictionary slot."""
+    """Group the rows of an Arrow batch by its key columns WITHOUT
+    materializing Python objects per row: each column is dictionary-
+    encoded in Arrow (nulls get their own slot), ``key_codes`` groups
+    the index columns, and only each group's key tuple is looked up in
+    the vocabularies. Returns (local_codes int64, local_key_tuples)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -502,20 +427,11 @@ def _encode_batch_keys(batch, key_cols: List[str]):
             vocab = vocab + [None]
         per_col_idx.append(idx.to_numpy(zero_copy_only=False).astype(np.int64))
         per_col_vocab.append(vocab)
-    # mixed-radix combine of per-column local codes
-    combined = per_col_idx[0]
-    radix = [len(v) for v in per_col_vocab]
-    for i in range(1, len(per_col_idx)):
-        combined = combined * radix[i] + per_col_idx[i]
-    uniq, inv = np.unique(combined, return_inverse=True)
-    key_tuples = []
-    for u in uniq:
-        parts = []
-        for i in range(len(key_cols) - 1, -1, -1):
-            u, r = divmod(int(u), radix[i]) if i > 0 else (0, int(u))
-            parts.append(_canon_key(per_col_vocab[i][r]))
-        key_tuples.append(tuple(reversed(parts)))
-    return inv.astype(np.int64), key_tuples
+    codes, groups = key_codes(per_col_idx, batch.num_rows)
+    return codes, [
+        tuple(_canon_key(v[i]) for v, i in zip(per_col_vocab, g))
+        for g in groups
+    ]
 
 
 def _partial_builder_arrow(
@@ -790,21 +706,15 @@ def _spread_expr(src: DataFrame, key_cols: List[str], value_col: str,
 def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
     """JVM-side canonicalization of float/double KEY columns (NaN→NULL,
     -0.0→+0.0) so a hash repartition by the raw keys agrees with the
-    partial builders' canonicalized group identity (``_canon_key``):
+    partial builders' canonicalized group identity (``key_codes``):
     without it a NaN key and a NULL key would land in different
     partitions and the single-phase plan would emit two rows for the
     one canonical group the two-phase merger produces."""
     for c in key_cols:
-        dt = df.schema[c].dataType
-        if isinstance(dt, (FloatType, DoubleType)):
-            col = F.col(c)
-            df = df.withColumn(
-                c,
-                F.when(F.isnan(col), F.lit(None).cast(dt))
-                .when(col == 0.0, F.lit(0.0).cast(dt))
-                .otherwise(col),
-            )
+        if isinstance(df.schema[c].dataType, (FloatType, DoubleType)):
+            df = df.withColumn(c, canon_key_col(df, c))
     return df
+
 
 def _partial_builder(
     spec: SketchSpec,
@@ -970,9 +880,7 @@ def sketch_agg(
     ]
     out_schema = StructType(out_fields)
 
-    if getattr(spec, "supports_arrow", False) and getattr(
-        spec, "on_invalid", "error"
-    ) != "drop":
+    if getattr(spec, "supports_arrow", False):
         partials = src.mapInArrow(
             _partial_builder_arrow(
                 spec, key_cols, value_col, weight_col, out_col, out_schema

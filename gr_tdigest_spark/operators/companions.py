@@ -5,6 +5,7 @@ KLL) — each plugs the kernel monoid into the shared two-phase
 
 from __future__ import annotations
 
+import functools
 from typing import Optional, Sequence
 
 import numpy as np
@@ -18,9 +19,13 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     LongType,
+    StringType,
+    StructField,
+    StructType,
 )
 
 from gr_tdigest_spark.operators.agg import SketchSpec, sketch_agg
+from gr_tdigest_spark.operators.probe import key_codes, probe_by_key
 from gr_tdigest_spark.sketches.bloom import BloomFilter
 from gr_tdigest_spark.sketches.bottomk import BottomK, WeightedBottomK
 from gr_tdigest_spark.sketches.cms import CMS
@@ -104,8 +109,6 @@ def _factorize_groups(pdf, key_cols, value_col, weight_col=None):
     null/NaN-mask the value column, factorize the key tuple, and return
     ``(codes, keys_by_gid, values, weights)`` — or None when nothing
     survives. codes are int64 group ids aligned with values."""
-    from gr_tdigest_spark.operators.agg import _canon_key_tuple
-
     arr = np.asarray(pdf[value_col].to_numpy())
     ws = (
         np.asarray(pdf[weight_col].to_numpy())
@@ -113,32 +116,17 @@ def _factorize_groups(pdf, key_cols, value_col, weight_col=None):
     )
     mask = _missing_mask(arr)
     if mask is not None:
-        if not mask.any():
-            return None
         arr = arr[mask]
         if ws is not None:
             ws = ws[mask]
     if not arr.size:
         return None
-    if not key_cols:
-        return (
-            np.zeros(arr.size, dtype=np.int64), [()], arr, ws
-        )
-    key_arrays = [
-        (pdf[k].to_numpy() if mask is None else pdf[k].to_numpy()[mask])
-        for k in key_cols
-    ]
-    if len(key_cols) == 1:
-        codes, uniq = pd.factorize(
-            pd.Series(key_arrays[0]), use_na_sentinel=False
-        )
-        keys_by_gid = [_canon_key_tuple((u,)) for u in uniq]
-    else:
-        codes, uniq = pd.factorize(
-            pd.MultiIndex.from_arrays(key_arrays), use_na_sentinel=False
-        )
-        keys_by_gid = [_canon_key_tuple(tuple(u)) for u in uniq]
-    return codes.astype(np.int64), keys_by_gid, arr, ws
+    codes, keys_by_gid = key_codes(
+        [pdf[k].to_numpy() if mask is None else pdf[k].to_numpy()[mask]
+         for k in key_cols],
+        arr.size,
+    )
+    return codes, keys_by_gid, arr, ws
 
 
 def _group_bounds(gcodes: np.ndarray):
@@ -665,284 +653,115 @@ def bottomk_agg(df: DataFrame, keys, col: str, k: int = 64,
 
 # ------------------------------------------------------------------ #
 # query functions (pandas UDFs over the sketch blob columns)
+#
+# Each UDF is built once, here; the Python functions apply it and
+# register_companion_sql registers the same object, so both surfaces
+# run one body. NULL contract: a NULL blob gives NULL, except the
+# membership / per-row count probes (bloom_contains → false,
+# cms_estimate_col → 0); merges skip NULL blobs and an all-NULL group
+# merges to NULL.
 # ------------------------------------------------------------------ #
 
-def hll_estimate(col) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _e(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [HLL.from_bytes(b).estimate() for b in blobs], dtype="float64"
+def _per_blob(blobs: pd.Series, fn, dtype="float64") -> pd.Series:
+    """``fn(blob bytes)`` per row; a NULL blob gives NULL."""
+    return pd.Series(
+        [None if b is None else fn(bytes(b)) for b in blobs], dtype=dtype
+    )
+
+
+def _per_blob_pair(a_blobs: pd.Series, b_blobs: pd.Series, fn) -> pd.Series:
+    """``fn(a bytes, b bytes)`` per row; NULL if either side is NULL."""
+    out = np.full(len(a_blobs), np.nan)
+    for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
+        if ab is not None and bb is not None:
+            out[i] = fn(bytes(ab), bytes(bb))
+    return pd.Series(out)
+
+
+def _per_blob_arg(blobs: pd.Series, args: pd.Series, fn) -> pd.Series:
+    """``fn(blob bytes, arg)`` per row; NULL if either is NULL."""
+    out = np.full(len(blobs), np.nan)
+    for i, (b, a) in enumerate(zip(blobs, args)):
+        if b is not None and a is not None:
+            out[i] = fn(bytes(b), float(a))
+    return pd.Series(out)
+
+
+@F.pandas_udf(DoubleType())
+def _hll_estimate(blobs: pd.Series) -> pd.Series:
+    return _per_blob(blobs, lambda b: HLL.from_bytes(b).estimate())
+
+
+@F.pandas_udf(DoubleType())
+def _kll_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
+    return _per_blob_arg(
+        blobs, qs, lambda b, q: float(KLL.from_bytes(b).quantile(q)[0])
+    )
+
+
+@F.pandas_udf(DoubleType())
+def _kll_rank(blobs: pd.Series, xs: pd.Series) -> pd.Series:
+    return _per_blob_arg(
+        blobs, xs, lambda b, x: float(KLL.from_bytes(b).rank(x)[0])
+    )
+
+
+@F.pandas_udf(DoubleType())
+def _kll_count(blobs: pd.Series) -> pd.Series:
+    return _per_blob(blobs, lambda b: KLL.from_bytes(b).n)
+
+
+@F.pandas_udf(DoubleType())
+def _bottomk_distinct(blobs: pd.Series) -> pd.Series:
+    return _per_blob(
+        blobs, lambda b: BottomK.from_bytes(b).distinct_estimate()
+    )
+
+
+@F.pandas_udf(DoubleType())
+def _hll_intersect(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
+    def ix(a, b):
+        ha, hb = HLL.from_bytes(a), HLL.from_bytes(b)
+        return max(
+            ha.estimate() + hb.estimate() - ha.merge(hb).estimate(), 0.0
         )
 
-    return _e(col)
+    return _per_blob_pair(a_blobs, b_blobs, ix)
 
 
-def hll_intersect_estimate(col_a, col_b) -> Column:
-    """Inclusion–exclusion intersection estimator over two HLL columns:
-    ``|A∩B| ≈ est(A) + est(B) − est(A∪B)`` (union = register-wise max —
-    exact for HLL), clamped at 0.
-
-    CAVEAT (SURVEY §2.8): unlike the union, the intersection has no
-    bounded relative error — each term carries ±1.04/√m of ITS OWN
-    cardinality, so the absolute error scales with |A∪B|. A small
-    intersection of two large sets can be estimated as 0 (after the
-    clamp) or off by multiples of itself. Use for intersections that
-    are a non-trivial fraction of the union; for rare-overlap joins use
-    Bloom semi-filters instead."""
-    return _make_hll_intersect_udf()(col_a, col_b)
+@F.pandas_udf(DoubleType())
+def _minhash_jaccard(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
+    return _per_blob_pair(
+        a_blobs, b_blobs,
+        lambda a, b: MinHash.from_bytes(a).jaccard(MinHash.from_bytes(b)),
+    )
 
 
-def register_companion_sql(spark) -> None:
-    """SQL names for the companion surface — the analogue of
-    ``functions.register_sql`` for t-digest: scalar probes plus
-    grouped-aggregate merges, so a pure-SQL user can roll up and query
-    sketch tables end to end:
+@F.pandas_udf(DoubleType())
+def _cms_inner_product(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
+    return _per_blob_pair(
+        a_blobs, b_blobs,
+        lambda a, b: float(
+            CMS.from_bytes(a).inner_product(CMS.from_bytes(b))
+        ),
+    )
 
-        SELECT g, hll_estimate(hll_merge(hll)) FROM sketches GROUP BY g
-        SELECT minhash_jaccard(a.mh, b.mh) FROM ...
 
-    Merges need no config arguments: every blob carries its own header
-    and the kernels enforce merge compatibility (mismatched configs
-    raise, same contract as the Python surface). Probe keys for
-    ``bloom_contains``/``cms_estimate`` are STRING columns here —
-    SQL-side probing of a sketch ingested from a non-string column
-    must cast consistently on both sides (hashing is dtype-aware)."""
-
-    def _merge_udf(kernel):
-        @F.pandas_udf(BinaryType())
-        def _merge(blobs: pd.Series) -> Optional[bytes]:
-            states = [
-                kernel.from_bytes(bytes(b)) for b in blobs if b is not None
-            ]
-            if not states:
-                return None
-            out = states[0]
-            for s in states[1:]:
-                out = out.merge(s)
-            return out.to_bytes()
-
-        return _merge
-
-    spark.udf.register("hll_merge", _merge_udf(HLL))
-    spark.udf.register("cms_merge", _merge_udf(CMS))
-    spark.udf.register("bloom_merge", _merge_udf(BloomFilter))
-    spark.udf.register("minhash_merge", _merge_udf(MinHash))
-    spark.udf.register("kll_merge", _merge_udf(KLL))
-    spark.udf.register("bottomk_merge", _merge_udf(BottomK))
-
-    @F.pandas_udf(DoubleType())
-    def _hll_est(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else HLL.from_bytes(bytes(b)).estimate()
-             for b in blobs],
-            dtype="float64",
+@F.pandas_udf(DoubleType())
+def _minhash_hll_intersect(ma: pd.Series, mb: pd.Series,
+                           ha: pd.Series, hb: pd.Series) -> pd.Series:
+    out = np.full(len(ma), np.nan)
+    for i, (a, b, u, v) in enumerate(zip(ma, mb, ha, hb)):
+        if a is None or b is None or u is None or v is None:
+            continue
+        j = MinHash.from_bytes(bytes(a)).jaccard(
+            MinHash.from_bytes(bytes(b))
         )
-
-    @F.pandas_udf(DoubleType())
-    def _kll_q(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        out = np.full(len(blobs), np.nan)
-        for i, (b, q) in enumerate(zip(blobs, qs)):
-            if b is not None and q is not None:
-                out[i] = float(KLL.from_bytes(bytes(b)).quantile(
-                    float(q))[0])
-        return pd.Series(out)
-
-    @F.pandas_udf(DoubleType())
-    def _bk_distinct(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             BottomK.from_bytes(bytes(b)).distinct_estimate()
-             for b in blobs],
-            dtype="float64",
-        )
-
-    from pyspark.sql.types import StringType as _StringType
-
-    @F.pandas_udf(ArrayType(_StringType()))
-    def _bk_sample(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             [v if isinstance(v, str) else str(v)
-              for v in BottomK.from_bytes(bytes(b)).sample()]
-             for b in blobs],
-        )
-
-    spark.udf.register("hll_estimate", _hll_est)
-    spark.udf.register("kll_quantile", _kll_q)
-    spark.udf.register("bottomk_distinct", _bk_distinct)
-    spark.udf.register("bottomk_sample", _bk_sample)
-    spark.udf.register("bloom_contains", _make_bloom_contains_udf())
-    spark.udf.register("cms_estimate", _make_cms_estimate_col_udf())
-    spark.udf.register("minhash_jaccard", _make_minhash_jaccard_udf())
-    spark.udf.register("hll_intersect", _make_hll_intersect_udf())
-    spark.udf.register("cms_inner_product", _make_cms_ip_udf())
-
-
-def _make_bloom_contains_udf():
-    @F.pandas_udf(BooleanType())
-    def _c(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        out = np.zeros(len(blobs), dtype=bool)
-        arr = keys.to_numpy()
-        for bb, idxs in _group_rows_by_blob(blobs):
-            sk = BloomFilter.from_bytes(bb)
-            out[idxs] = sk.contains(arr[idxs])
-        return pd.Series(out)
-
-    return _c
-
-
-def _make_cms_estimate_col_udf():
-    @F.pandas_udf(LongType())
-    def _e(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        out = np.zeros(len(blobs), dtype=np.int64)
-        arr = keys.to_numpy()
-        for bb, idxs in _group_rows_by_blob(blobs):
-            sk = CMS.from_bytes(bb)
-            out[idxs] = sk.estimate(arr[idxs])
-        return pd.Series(out)
-
-    return _e
-
-
-def _make_minhash_jaccard_udf():
-    @F.pandas_udf(DoubleType())
-    def _j(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                out[i] = MinHash.from_bytes(bytes(ab)).jaccard(
-                    MinHash.from_bytes(bytes(bb))
-                )
-        return pd.Series(out)
-
-    return _j
-
-
-def _make_hll_intersect_udf():
-    @F.pandas_udf(DoubleType())
-    def _ix(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                ha = HLL.from_bytes(bytes(ab))
-                hb = HLL.from_bytes(bytes(bb))
-                out[i] = max(
-                    ha.estimate() + hb.estimate()
-                    - ha.merge(hb).estimate(), 0.0,
-                )
-        return pd.Series(out)
-
-    return _ix
-
-
-def _make_cms_ip_udf():
-    @F.pandas_udf(DoubleType())
-    def _ip(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                out[i] = float(CMS.from_bytes(bytes(ab)).inner_product(
-                    CMS.from_bytes(bytes(bb))
-                ))
-        return pd.Series(out)
-
-    return _ip
-
-
-def merge_sketches(col, spec: SketchSpec) -> Column:
-    """Grouped-aggregate merge of ANY sketch blob column — the generic
-    analogue of ``functions.merge_tdigests``. Usable anywhere Spark
-    accepts an aggregate expression: ``groupBy``, ``cube``, ``rollup``,
-    grouping sets, window frames — so a fine-grained sketch table
-    (e.g. per-(role, tool) HLLs) rolls up to every coarser grouping by
-    merging blobs, never rescanning facts. That is the 100 TB shape
-    for OLAP-style subtotals: facts are read once at the finest grain;
-    the cube is computed entirely on sketch-sized rows.
-
-    NULL blobs are skipped; an all-NULL (or empty) group yields NULL.
-    Merge-compatibility is enforced by the kernels (mismatched configs
-    raise, same contract as every other surface)."""
-
-    @F.pandas_udf(BinaryType())
-    def _merge(blobs: pd.Series) -> Optional[bytes]:
-        states = [
-            spec.blob_to_state(bytes(b)) for b in blobs if b is not None
-        ]
-        if not states:
-            return None
-        return spec.state_to_blob(spec.merge_many(states))
-
-    return _merge(col)
-
-
-def minhash_jaccard(col_a, col_b) -> Column:
-    """Estimated Jaccard similarity between two MinHash signature
-    columns: (# matching slots)/k — k·Ĵ ~ Binomial(k, J), std error
-    ≤ 1/(2√k). NULL if either side is NULL. Signatures must share
-    (k, seed); incompatible pairs raise (merge-compatibility contract,
-    same as every other sketch)."""
-    return _make_minhash_jaccard_udf()(col_a, col_b)
-
-
-def minhash_hll_intersect_estimate(mh_a, mh_b, hll_a, hll_b) -> Column:
-    """Intersection-size estimator composing the two set sketches:
-    ``|A∩B| ≈ Ĵ(A,B) · |A∪B|`` with Ĵ from the MinHash signatures and
-    the union cardinality from the merged HLLs (register-wise max —
-    exact union semantics). All four sketches must be built over the
-    SAME two sets.
-
-    Why this beats HLL inclusion–exclusion (``hll_intersect_estimate``)
-    for small overlaps: I–E's absolute error is ~1.04/√m of EACH
-    operand's cardinality regardless of the overlap, so a small
-    intersection of two large sets drowns in it. Here the error is
-    ≈ |A∪B|·(σ_J + J·1.04/√m) with σ_J = sqrt(J(1−J)/k) — it SHRINKS
-    with J, so rare overlaps stay resolvable (SURVEY §2.8 caveat
-    addressed by composition rather than by a bigger m)."""
-
-    @F.pandas_udf(DoubleType())
-    def _ix(ma: pd.Series, mb: pd.Series,
-            ha: pd.Series, hb: pd.Series) -> pd.Series:
-        out = np.full(len(ma), np.nan)
-        for i, (a, b, u, v) in enumerate(zip(ma, mb, ha, hb)):
-            if a is None or b is None or u is None or v is None:
-                continue
-            j = MinHash.from_bytes(bytes(a)).jaccard(
-                MinHash.from_bytes(bytes(b))
-            )
-            union = HLL.from_bytes(bytes(u)).merge(
-                HLL.from_bytes(bytes(v))
-            ).estimate()
-            out[i] = j * union
-        return pd.Series(out)
-
-    return _ix(mh_a, mh_b, hll_a, hll_b)
-
-
-def cms_inner_product(col_a, col_b) -> Column:
-    """Estimated inner product of two CMS-sketched frequency vectors —
-    for sketches built on each table's join key this is the equi-JOIN
-    SIZE estimate (a·b ≤ est ≤ a·b + ε·N_a·N_b w.p. ≥ 1−δ): the
-    100 TB use is costing a join between two fact tables from two
-    sketch blobs, without shuffling either side."""
-    return _make_cms_ip_udf()(col_a, col_b)
-
-
-def cms_estimate(col, candidates: Sequence) -> Column:
-    """Estimated counts for a fixed candidate list → array<long>.
-
-    NOTE: candidate dtype must match the ingested column dtype (ints stay
-    ints) — hashing is dtype-aware."""
-    cand = np.asarray(candidates)
-    if cand.dtype.kind == "U":
-        cand = cand.astype(object)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _e(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [CMS.from_bytes(b).estimate(cand).tolist() for b in blobs]
-        )
-
-    return _e(col)
+        union = HLL.from_bytes(bytes(u)).merge(
+            HLL.from_bytes(bytes(v))
+        ).estimate()
+        out[i] = j * union
+    return pd.Series(out)
 
 
 def _group_rows_by_blob(blobs: pd.Series):
@@ -958,79 +777,31 @@ def _group_rows_by_blob(blobs: pd.Series):
         yield bb, np.asarray(idxs, dtype=np.int64)
 
 
-def cms_estimate_col(blob_col, key_col) -> Column:
-    """Per-row estimate: sketch blob column × per-row key column.
-    Key dtype must match the ingested column dtype (hashing is
-    dtype-aware). NULL blobs yield 0."""
-    return _make_cms_estimate_col_udf()(blob_col, key_col)
+@F.pandas_udf(BooleanType())
+def _bloom_contains(blobs: pd.Series, keys: pd.Series) -> pd.Series:
+    out = np.zeros(len(blobs), dtype=bool)
+    arr = keys.to_numpy()
+    for bb, idxs in _group_rows_by_blob(blobs):
+        out[idxs] = BloomFilter.from_bytes(bb).contains(arr[idxs])
+    return pd.Series(out)
 
 
-def bloom_contains(blob_col, key_col) -> Column:
-    """Membership probe: sketch blob column × per-row key column.
-    Key dtype must match the ingested column dtype (hashing is
-    dtype-aware). NULL blobs yield false."""
-    return _make_bloom_contains_udf()(blob_col, key_col)
+@F.pandas_udf(LongType())
+def _cms_estimate_col(blobs: pd.Series, keys: pd.Series) -> pd.Series:
+    out = np.zeros(len(blobs), dtype=np.int64)
+    arr = keys.to_numpy()
+    for bb, idxs in _group_rows_by_blob(blobs):
+        out[idxs] = CMS.from_bytes(bb).estimate(arr[idxs])
+    return pd.Series(out)
 
 
-def kll_quantile(col, q: float) -> Column:
-    qv = float(q)
-
-    @F.pandas_udf(DoubleType())
-    def _q(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(KLL.from_bytes(b).quantile(qv)[0]) for b in blobs],
-            dtype="float64",
-        )
-
-    return _q(col)
-
-
-def kll_rank(col, x: float) -> Column:
-    xv = float(x)
-
-    @F.pandas_udf(DoubleType())
-    def _r(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(KLL.from_bytes(b).rank(xv)[0]) for b in blobs],
-            dtype="float64",
-        )
-
-    return _r(col)
-
-
-def kll_count(col) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _n(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [KLL.from_bytes(b).n for b in blobs], dtype="float64"
-        )
-
-    return _n(col)
-
-
-def bottomk_distinct(col) -> Column:
-    """Distinct-count estimate from a bottom-k blob column (exact below
-    capacity; KMV (k−1)/U_(k) at it — rel. std error ≈ 1/√(k−2))."""
-
-    @F.pandas_udf(DoubleType())
-    def _d(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             BottomK.from_bytes(bytes(b)).distinct_estimate()
-             for b in blobs],
-            dtype="float64",
-        )
-
-    return _d(col)
-
-
-def _sketch_sample_col(col, dtype: str, kernel) -> Column:
-    """Shared decode for the sample-bearing bottom-k wires: the stored
-    sample as an array column, decoded with ``kernel.from_bytes``
-    (BottomK for GSBK KMV blobs, WeightedBottomK for GSWK race blobs —
-    the magics differ, so the right decoder must be picked)."""
-    from pyspark.sql.types import StringType
-
+@functools.lru_cache(maxsize=None)
+def _sample_udf(dtype: str, kernel):
+    """The stored sample of a sample-bearing bottom-k blob as an array
+    column, decoded with ``kernel.from_bytes`` (BottomK for GSBK KMV
+    blobs, WeightedBottomK for GSWK race blobs — the magics differ, so
+    the right decoder must be picked). Built once per (dtype, kernel):
+    at most six."""
     elem = {
         "string": StringType(), "long": LongType(),
         "double": DoubleType(),
@@ -1047,13 +818,170 @@ def _sketch_sample_col(col, dtype: str, kernel) -> Column:
 
     @F.pandas_udf(ArrayType(elem))
     def _s(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             [conv(v) for v in kernel.from_bytes(bytes(b)).sample()]
-             for b in blobs],
+        return _per_blob(
+            blobs, lambda b: [conv(v) for v in kernel.from_bytes(b).sample()],
+            dtype=object,
         )
 
-    return _s(col)
+    return _s
+
+
+def _merge_udf(spec: SketchSpec):
+    """Grouped-aggregate merge of ``spec``'s blobs (NULLs skipped; an
+    all-NULL or empty group gives NULL)."""
+
+    @F.pandas_udf(BinaryType())
+    def _merge(blobs: pd.Series) -> Optional[bytes]:
+        states = [
+            spec.blob_to_state(bytes(b)) for b in blobs if b is not None
+        ]
+        if not states:
+            return None
+        return spec.state_to_blob(spec.merge_many(states))
+
+    return _merge
+
+
+def hll_estimate(col) -> Column:
+    return _hll_estimate(col)
+
+
+def hll_intersect_estimate(col_a, col_b) -> Column:
+    """Inclusion–exclusion intersection estimator over two HLL columns:
+    ``|A∩B| ≈ est(A) + est(B) − est(A∪B)`` (union = register-wise max —
+    exact for HLL), clamped at 0.
+
+    CAVEAT (SURVEY §2.8): unlike the union, the intersection has no
+    bounded relative error — each term carries ±1.04/√m of ITS OWN
+    cardinality, so the absolute error scales with |A∪B|. A small
+    intersection of two large sets can be estimated as 0 (after the
+    clamp) or off by multiples of itself. Use for intersections that
+    are a non-trivial fraction of the union; for rare-overlap joins use
+    Bloom semi-filters instead."""
+    return _hll_intersect(col_a, col_b)
+
+
+def register_companion_sql(spark) -> None:
+    """SQL names for the companion surface — the analogue of
+    ``functions.register_sql`` for t-digest: scalar probes plus
+    grouped-aggregate merges, so a pure-SQL user can roll up and query
+    sketch tables end to end:
+
+        SELECT g, hll_estimate(hll_merge(hll)) FROM sketches GROUP BY g
+        SELECT minhash_jaccard(a.mh, b.mh) FROM ...
+
+    Merges need no config arguments: every blob carries its own header
+    and the kernels enforce merge compatibility (mismatched configs
+    raise, same contract as the Python surface). Probe keys for
+    ``bloom_contains``/``cms_estimate`` are STRING columns here —
+    SQL-side probing of a sketch ingested from a non-string column
+    must cast consistently on both sides (hashing is dtype-aware).
+    Every name runs the Python surface's UDF, NULL contract included
+    (``cms_estimate`` here is ``cms_estimate_col``)."""
+    for name, udf in _SQL_UDFS.items():
+        spark.udf.register(name, udf)
+
+
+def merge_sketches(col, spec: SketchSpec) -> Column:
+    """Grouped-aggregate merge of ANY sketch blob column — the generic
+    analogue of ``functions.merge_tdigests``. Usable anywhere Spark
+    accepts an aggregate expression: ``groupBy``, ``cube``, ``rollup``,
+    grouping sets, window frames — so a fine-grained sketch table
+    (e.g. per-(role, tool) HLLs) rolls up to every coarser grouping by
+    merging blobs, never rescanning facts. That is the 100 TB shape
+    for OLAP-style subtotals: facts are read once at the finest grain;
+    the cube is computed entirely on sketch-sized rows.
+
+    NULL blobs are skipped; an all-NULL (or empty) group yields NULL.
+    Merge-compatibility is enforced by the kernels (mismatched configs
+    raise, same contract as every other surface)."""
+    return _merge_udf(spec)(col)
+
+
+def minhash_jaccard(col_a, col_b) -> Column:
+    """Estimated Jaccard similarity between two MinHash signature
+    columns: (# matching slots)/k — k·Ĵ ~ Binomial(k, J), std error
+    ≤ 1/(2√k). NULL if either side is NULL. Signatures must share
+    (k, seed); incompatible pairs raise (merge-compatibility contract,
+    same as every other sketch)."""
+    return _minhash_jaccard(col_a, col_b)
+
+
+def minhash_hll_intersect_estimate(mh_a, mh_b, hll_a, hll_b) -> Column:
+    """Intersection-size estimator composing the two set sketches:
+    ``|A∩B| ≈ Ĵ(A,B) · |A∪B|`` with Ĵ from the MinHash signatures and
+    the union cardinality from the merged HLLs (register-wise max —
+    exact union semantics). All four sketches must be built over the
+    SAME two sets.
+
+    Why this beats HLL inclusion–exclusion (``hll_intersect_estimate``)
+    for small overlaps: I–E's absolute error is ~1.04/√m of EACH
+    operand's cardinality regardless of the overlap, so a small
+    intersection of two large sets drowns in it. Here the error is
+    ≈ |A∪B|·(σ_J + J·1.04/√m) with σ_J = sqrt(J(1−J)/k) — it SHRINKS
+    with J, so rare overlaps stay resolvable (SURVEY §2.8 caveat
+    addressed by composition rather than by a bigger m)."""
+    return _minhash_hll_intersect(mh_a, mh_b, hll_a, hll_b)
+
+
+def cms_inner_product(col_a, col_b) -> Column:
+    """Estimated inner product of two CMS-sketched frequency vectors —
+    for sketches built on each table's join key this is the equi-JOIN
+    SIZE estimate (a·b ≤ est ≤ a·b + ε·N_a·N_b w.p. ≥ 1−δ): the
+    100 TB use is costing a join between two fact tables from two
+    sketch blobs, without shuffling either side."""
+    return _cms_inner_product(col_a, col_b)
+
+
+def cms_estimate(col, candidates: Sequence) -> Column:
+    """Estimated counts for a fixed candidate list → array<long>.
+
+    NOTE: candidate dtype must match the ingested column dtype (ints stay
+    ints) — hashing is dtype-aware."""
+    cand = np.asarray(candidates)
+    if cand.dtype.kind == "U":
+        cand = cand.astype(object)
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def _e(blobs: pd.Series) -> pd.Series:
+        return _per_blob(
+            blobs, lambda b: CMS.from_bytes(b).estimate(cand).tolist(),
+            dtype=object,
+        )
+
+    return _e(col)
+
+
+def cms_estimate_col(blob_col, key_col) -> Column:
+    """Per-row estimate: sketch blob column × per-row key column.
+    Key dtype must match the ingested column dtype (hashing is
+    dtype-aware). NULL blobs yield 0."""
+    return _cms_estimate_col(blob_col, key_col)
+
+
+def bloom_contains(blob_col, key_col) -> Column:
+    """Membership probe: sketch blob column × per-row key column.
+    Key dtype must match the ingested column dtype (hashing is
+    dtype-aware). NULL blobs yield false."""
+    return _bloom_contains(blob_col, key_col)
+
+
+def kll_quantile(col, q: float) -> Column:
+    return _kll_quantile(col, F.lit(float(q)))
+
+
+def kll_rank(col, x: float) -> Column:
+    return _kll_rank(col, F.lit(float(x)))
+
+
+def kll_count(col) -> Column:
+    return _kll_count(col)
+
+
+def bottomk_distinct(col) -> Column:
+    """Distinct-count estimate from a bottom-k blob column (exact below
+    capacity; KMV (k−1)/U_(k) at it — rel. std error ≈ 1/√(k−2))."""
+    return _bottomk_distinct(col)
 
 
 def bottomk_sample(col, dtype: str = "string") -> Column:
@@ -1062,7 +990,25 @@ def bottomk_sample(col, dtype: str = "string") -> Column:
     'double' (sampled values are returned with their original type;
     'string' additionally stringifies non-string values for generic
     inspection)."""
-    return _sketch_sample_col(col, dtype, BottomK)
+    return _sample_udf(dtype, BottomK)(col)
+
+
+_SQL_UDFS = {
+    **{
+        f"{spec.name}_merge": _merge_udf(spec)
+        for spec in (HLLSpec(), CMSSpec(), BloomSpec(), MinHashSpec(),
+                     KLLSpec(), BottomKSpec())
+    },
+    "hll_estimate": _hll_estimate,
+    "kll_quantile": _kll_quantile,
+    "bottomk_distinct": _bottomk_distinct,
+    "bottomk_sample": _sample_udf("string", BottomK),
+    "bloom_contains": _bloom_contains,
+    "cms_estimate": _cms_estimate_col,
+    "minhash_jaccard": _minhash_jaccard,
+    "hll_intersect": _hll_intersect,
+    "cms_inner_product": _cms_inner_product,
+}
 
 
 # ------------------------------------------------------------------ #
@@ -1169,15 +1115,13 @@ def cms_topk(
     dimension is the VALUE space, which never leaves the sketch).
 
     ``strategy='cogroup'`` is the fallback when n_groups × sketch size
-    exceeds driver memory: candidates ⋈ sketches via cogroup (same
-    shape as with_group_cdf's), each blob crossing the wire once per
-    group with no driver hop. Grouped queries only — the global
-    (keys=None) sketch table is one row, where broadcast always wins.
+    exceeds driver memory: candidates ⋈ sketches via cogroup on the
+    canonical keys (the keyed-probe plan of ``operators.probe``, shared
+    with ``with_group_cdf``), each blob crossing the wire once per group
+    with no driver hop. Both strategies return the same rows. Grouped
+    queries only — the global (keys=None) sketch table is one row,
+    where broadcast always wins.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    if strategy not in ("broadcast", "cogroup"):
-        raise ValueError("strategy must be 'broadcast' or 'cogroup'")
     key_cols = list(keys) if keys else []
     m = m or max(4 * k, 64)
     src = df.select(*dict.fromkeys(key_cols + [col]))
@@ -1207,80 +1151,28 @@ def cms_topk(
     sketch = cms_agg(df, key_cols or None, col, depth=depth, width=width,
                      seed=seed)
 
-    if strategy == "cogroup" and key_cols:
-        est_schema = StructType(
-            [cand.schema[c] for c in key_cols]
-            + [cand.schema[col], StructField(out_col, LongType(), True)]
-        )
-
-        def attach(c_pdf: pd.DataFrame, s_pdf: pd.DataFrame) -> pd.DataFrame:
-            res = c_pdf.copy()
-            if len(s_pdf) and len(c_pdf):
-                sk = CMS.from_bytes(bytes(s_pdf["cms"].iloc[0]))
-                res[out_col] = sk.estimate(
-                    c_pdf[col].to_numpy()
-                ).astype(np.int64)
-            else:
-                res[out_col] = np.int64(0)
-            return res
-
-        est = (
-            cand.groupBy(*key_cols)
-            .cogroup(sketch.groupBy(*key_cols))
-            .applyInPandas(attach, schema=est_schema)
-        )
-        return _rank_topk(est, key_cols, col, out_col, k)
-
     # the CMS blob is ~depth·width·8 bytes (MBs at useful widths) — a
-    # broadcast JOIN would ship it once per candidate row through Arrow.
-    # Ship the tiny sketch TABLE once per executor as a Spark broadcast
-    # variable instead; candidates carry only (keys, value).
-    # (Tried and rejected: overlapping the sketch collect with an
-    # eager persist of the candidate table — caching the candidate
-    # subtree loses AQE shuffle coalescing inside the cached plan, and
-    # the 32-task un-coalesced Python stages cost more than the ~0.2 s
-    # of job overlap bought back: q10 1.05 s → 2.0 s measured.)
-    from gr_tdigest_spark.operators.agg import _canon_key_tuple
-
-    sk_map = {
-        _canon_key_tuple(tuple(r[k] for k in key_cols)): bytes(r["cms"])
-        for r in sketch.collect()
-    }
-    bc = df.sparkSession.sparkContext.broadcast(sk_map)
-
-    @F.pandas_udf(LongType())
-    def _est(*cols: pd.Series) -> pd.Series:
-        vals = cols[-1]
-        out = np.zeros(len(vals), dtype=np.int64)
-        if not len(vals):
-            return pd.Series(out)
-        arr = vals.to_numpy()
-        if key_cols:
-            if len(cols) == 2:
-                codes, uniq = pd.factorize(cols[0], use_na_sentinel=False)
-                ktups = [_canon_key_tuple((u,)) for u in uniq]
-            else:
-                codes, uniq = pd.factorize(
-                    pd.MultiIndex.from_arrays(list(cols[:-1])),
-                    use_na_sentinel=False,
-                )
-                ktups = [_canon_key_tuple(u) for u in uniq]
-        else:
-            codes = np.zeros(len(vals), dtype=np.int64)
-            ktups = [()]
-        mp = bc.value
-        for gi, kt in enumerate(ktups):
-            blob = mp.get(kt)
-            if blob is None:
-                continue
-            idx = np.flatnonzero(codes == gi)
-            out[idx] = CMS.from_bytes(blob).estimate(arr[idx])
-        return pd.Series(out)
-
-    est = cand.select(
-        *key_cols, col, _est(*key_cols, col).alias(out_col)
+    # broadcast JOIN would ship it once per candidate row through Arrow;
+    # the keyed-probe plan ships the sketch TABLE once per executor
+    # instead (or cogroups it per group), candidates carry only
+    # (keys, value). (Tried and rejected: overlapping the sketch collect
+    # with an eager persist of the candidate table — caching the
+    # candidate subtree loses AQE shuffle coalescing inside the cached
+    # plan, and the 32-task un-coalesced Python stages cost more than
+    # the ~0.2 s of job overlap bought back: q10 1.05 s → 2.0 s.)
+    est = probe_by_key(
+        cand, sketch, key_cols, "cms", col,
+        StructField(out_col, LongType(), True), _cms_estimate, 0, strategy,
     )
     return _rank_topk(est, key_cols, col, out_col, k)
+
+
+def _cms_estimate(blobs, sketch, values):
+    out = np.empty(len(values), dtype=np.int64)
+    for i, blob in enumerate(blobs):
+        rows = np.flatnonzero(sketch == i)
+        out[rows] = CMS.from_bytes(blob).estimate(values[rows])
+    return out
 
 
 def _rank_topk(est, key_cols, col, out_col, k):
@@ -1310,7 +1202,8 @@ def bloom_filter_rows(
 ) -> DataFrame:
     """Semi-join reduction via a Bloom filter — ship the filter, not
     the shuffle: the (single-row) Bloom table collects to a broadcast
-    variable and the big side filters locally; no shuffle of ``df``, no
+    variable (the keyless case of ``operators.probe.probe_by_key``) and
+    the big side filters locally; no shuffle of ``df``, no
     blob-per-row join. False positives pass (no false negatives), so
     this is the standard pre-filter before an exact join at 100 TB —
     it cuts the exact join's shuffle volume by the true selectivity.
@@ -1321,20 +1214,22 @@ def bloom_filter_rows(
     ``key_dtype="int64"`` (or pre-filter nulls) to probe with the
     ingested dtype.
     """
-    blob = bytes(bloom_df.select(blob_col).first()[0])
-    bc = df.sparkSession.sparkContext.broadcast(blob)
+    member = "__bloom_member"
+    probed = probe_by_key(
+        df, bloom_df, [], blob_col, key_col,
+        StructField(member, BooleanType(), True),
+        functools.partial(_bloom_member, key_dtype), False,
+    )
+    cond = F.col(member)
+    return probed.where(~cond if negate else cond).drop(member)
 
-    @F.pandas_udf(BooleanType())
-    def _member(keys: pd.Series) -> pd.Series:
-        sk = BloomFilter.from_bytes(bc.value)
-        out = np.zeros(len(keys), dtype=bool)
-        mask = keys.notna().to_numpy()
-        vals = keys.to_numpy()[mask]
-        if key_dtype is not None:
-            vals = vals.astype(np.dtype(key_dtype))
-        if vals.size:
-            out[mask] = sk.contains(vals)
-        return pd.Series(out)
 
-    cond = _member(F.col(key_col))
-    return df.where(~cond if negate else cond)
+def _bloom_member(key_dtype, blobs, sketch, values):
+    out = np.zeros(len(values), dtype=bool)
+    mask = pd.notna(values)
+    vals = values[mask]
+    if key_dtype is not None:
+        vals = vals.astype(np.dtype(key_dtype))
+    if vals.size:
+        out[mask] = BloomFilter.from_bytes(blobs[0]).contains(vals)
+    return out

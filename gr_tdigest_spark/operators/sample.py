@@ -385,7 +385,7 @@ def _weighted_sketch_sample(eligible: DataFrame, k: int, ids: List[str],
     value tie-break keeps E-collisions deterministic."""
     from gr_tdigest_spark.operators.agg import sketch_agg
     from gr_tdigest_spark.operators.companions import (
-        WeightedBottomKSpec, _sketch_sample_col,
+        WeightedBottomKSpec, _sample_udf,
     )
     from gr_tdigest_spark.sketches.bottomk import WeightedBottomK
 
@@ -397,8 +397,7 @@ def _weighted_sketch_sample(eligible: DataFrame, k: int, ids: List[str],
         WeightedBottomKSpec(k=max(k, 2), seed=seed),
         weight_col="__es_e",
     )
-    sample_col = _sketch_sample_col("wbottomk", sample_dtype,
-                                    WeightedBottomK)
+    sample_col = _sample_udf(sample_dtype, WeightedBottomK)("wbottomk")
     id_rows = _explode_sampled_ids(sk, key_list, sample_col, k,
                                    join_col, fact, sample_dtype)
     return _semi_join_sampled(fact, key_list, id_rows, join_col,

@@ -7,15 +7,12 @@ here never attach a blob to a fact row:
 
 - group-constant probes (``with_group_quantile``): evaluate on the tiny
   digest table, broadcast-join the SCALAR result — pure JVM join.
-- per-row probes (``with_group_cdf``): a broadcast-join of the blob
-  column would move ~17 KB × fact-rows through Arrow into Python
-  (measured 42 s for 600 k rows vs 1-2 s for the map). Instead the
-  digest table ships ONCE per executor as a Spark broadcast variable
-  and a pandas UDF over (keys, probe) decodes each group's digest once
-  per batch; only the key + probe columns cross Arrow.
-- ``strategy='cogroup'`` covers group cardinalities too large to
-  broadcast (#groups × blob exceeding executor memory): facts cogroup
-  with digests on the keys, so each blob crosses once per group.
+- per-row probes (``with_group_cdf``): the keyed-probe plan of
+  ``operators.probe`` — the digest table ships once per executor as a
+  broadcast variable (default), or cogroups with the facts on the
+  canonical keys (``strategy='cogroup'``, for group counts too large to
+  broadcast); either way each group's digest decodes once per batch and
+  one batched CDF call answers its rows.
 """
 
 from __future__ import annotations
@@ -26,10 +23,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
 
 import gr_tdigest_spark.functions as Fn
-from gr_tdigest_spark.operators.agg import tdigest_agg, _canon_key_tuple
+from gr_tdigest_spark.operators.agg import tdigest_agg
+from gr_tdigest_spark.operators.probe import canon_key_col, probe_by_key
 from gr_tdigest_spark.sketches import wire as td_wire
 
 __all__ = [
@@ -37,18 +35,6 @@ __all__ = [
     "with_group_cdf",
     "filter_by_group_quantile",
 ]
-
-
-def _null_canon_key(df: DataFrame, name: str, qualifier: str):
-    """Key expression for the digest join-back: float NaN keys are
-    canonicalized to NULL (mirroring what the aggregate's partial stage
-    does to group keys), so a NaN-keyed fact row matches its digest."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    c = F.col(f"{qualifier}.`{name}`")
-    if isinstance(df.schema[name].dataType, (DoubleType, FloatType)):
-        return F.when(F.isnan(c), F.lit(None)).otherwise(c)
-    return c
 
 
 def with_group_quantile(
@@ -78,8 +64,8 @@ def with_group_quantile(
     fact, dim = df.alias("__gqf"), F.broadcast(scalars).alias("__gqs")
     cond = None
     for k in key_cols:
-        e = _null_canon_key(df, k, "__gqf").eqNullSafe(
-            _null_canon_key(scalars, k, "__gqs")
+        e = canon_key_col(df, k, "__gqf").eqNullSafe(
+            canon_key_col(scalars, k, "__gqs")
         )
         cond = e if cond is None else (cond & e)
     return fact.join(dim, cond, "left").select(
@@ -128,72 +114,10 @@ def filter_by_group_quantile(
     return out.where(cond).drop(thr_col).select(*df.columns)
 
 
-def _broadcast_cdf(df, key_cols, probe_col, out_col, digests):
-    """Digest map as a Spark broadcast variable; fact rows carry only
-    keys + probe through Arrow."""
-    blob_map = {
-        _canon_key_tuple(tuple(r[k] for k in key_cols)): bytes(r["tdigest"])
-        for r in digests.collect()
-    }
-    bc = df.sparkSession.sparkContext.broadcast(blob_map)
-
-    @F.pandas_udf(DoubleType())
-    def _cdf(*cols: pd.Series) -> pd.Series:
-        probe = cols[-1]
-        xarr = probe.to_numpy(dtype=np.float64, na_value=np.nan)
-        out = np.full(len(probe), np.nan)
-        if not len(probe):
-            return pd.Series(out)
-        # vectorized key grouping (one factorize per batch, no per-row
-        # Python) — same pattern as the partial builders in agg.py
-        if len(cols) == 2:
-            codes, uniques = pd.factorize(cols[0], use_na_sentinel=False)
-            key_tuples = [_canon_key_tuple((u,)) for u in uniques]
-        else:
-            codes, uniques = pd.factorize(
-                pd.MultiIndex.from_arrays([c for c in cols[:-1]]),
-                use_na_sentinel=False,
-            )
-            key_tuples = [_canon_key_tuple(u) for u in uniques]
-        # the batch's groups decode once, then one cdf kernel call over
-        # every row whose group has a digest; unseen groups stay null,
-        # matching a left join
-        mp = bc.value
-        blobs = [mp.get(key) for key in key_tuples]
-        known = np.asarray([bb is not None for bb in blobs], dtype=bool)
-        batch = td_wire.decode_batch([bb for bb in blobs if bb is not None])
-        digest = np.full(len(blobs), -1, dtype=np.int64)
-        digest[known] = batch.rows
-        rows = np.flatnonzero(known[codes])
-        out[rows] = batch.cdf(digest[codes[rows]], xarr[rows])
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _cdf(*key_cols, probe_col))
-
-
-def _cogroup_cdf(df, key_cols, probe_col, out_col, digests):
-    """Scale path for huge group counts: facts ⋈ digests via cogroup —
-    each blob crosses the wire once per group, never once per row."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, DoubleType(), True)]
-    )
-
-    def attach(facts: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
-        res = facts.copy()
-        if len(dig) and len(facts):
-            batch = td_wire.decode_batch(dig["tdigest"].iloc[:1])
-            xs = facts[probe_col].to_numpy(dtype=np.float64,
-                                           na_value=np.nan)
-            res[out_col] = batch.cdf(0, xs)
-        else:
-            res[out_col] = np.nan
-        return res
-
-    return (
-        df.groupBy(*key_cols)
-        .cogroup(digests.groupBy(*key_cols))
-        .applyInPandas(attach, schema=out_schema)
-    )
+def _cdf(blobs, digest, xs):
+    batch = td_wire.decode_batch(blobs)
+    xs = pd.Series(xs).to_numpy(dtype=np.float64, na_value=np.nan)
+    return batch.cdf(batch.rows[digest], xs)
 
 
 def with_group_cdf(
@@ -212,12 +136,14 @@ def with_group_cdf(
     executor; right whenever #groups × blob fits in memory (a 150k-group
     × 17 KB table is ~2.5 GB — switch strategies before that).
     ``strategy='cogroup'``: shuffle-based, blob crosses once per group.
+    Both answer a row from its canonical group (a NaN key reads the NULL
+    group's digest, -0.0 the 0.0 group's) and return ``df``'s columns
+    unchanged, plus ``out_col``.
     """
     probe_col = probe_col or value_col
     key_cols = list(keys)
     digests = tdigest_agg(df, key_cols, value_col, **cfg)
-    if strategy == "broadcast":
-        return _broadcast_cdf(df, key_cols, probe_col, out_col, digests)
-    if strategy == "cogroup":
-        return _cogroup_cdf(df, key_cols, probe_col, out_col, digests)
-    raise ValueError("strategy must be 'broadcast' or 'cogroup'")
+    return probe_by_key(
+        df, digests, key_cols, "tdigest", probe_col,
+        StructField(out_col, DoubleType(), True), _cdf, np.nan, strategy,
+    )

@@ -74,30 +74,13 @@ _PREFIX_CELLS = 1 << 20
 
 
 def q_to_k(q, d: float, family: str, n: float):
-    """Family-aware q→k mapping (reference scale.rs:43-82).
+    """Family-aware q→k mapping (reference scale.rs:43-82): the product
+    f(d) · g(q) of ``_k_scale_factor`` and ``_g_of_q``.
 
     ``q`` may be a scalar or ndarray. ``n`` is the centroid count of the
     current merge pass, consulted only by ``k2norm``.
     """
-    eps = 1e-15
-    qq = np.clip(q, eps, 1.0 - eps)
-    if family == "quad":
-        r = np.where(qq < 0.5, np.sqrt(qq * 0.5), 1.0 - np.sqrt((1.0 - qq) * 0.5))
-        return d * r
-    if family == "k1":
-        s = np.arcsin(np.clip(2.0 * qq - 1.0, -1.0, 1.0))
-        return (d / (2.0 * math.pi)) * s
-    if family == "k2":
-        return (d / (4.0 * _LN2)) * np.log(qq / (1.0 - qq))
-    if family == "k2norm":
-        factor = d / (math.log(n / d) * 4.0 + 24.0)
-        return factor * np.log(qq / (1.0 - qq))
-    if family == "k3":
-        a = np.log(1.0 / (1.0 - qq))
-        b = np.log(1.0 / qq)
-        ratio = np.maximum(a / b, eps)
-        return (d / 4.0) * np.log(ratio)
-    raise ValueError(f"unknown scale family: {family!r}")
+    return _k_scale_factor(d, family, n) * _g_of_q(q, family)
 
 
 def _coerce_pile_weights(weights: np.ndarray) -> np.ndarray:

@@ -1,11 +1,35 @@
-"""The vectorized multi-group builder must match the kernel exactly."""
+"""The vectorized multi-group builder must match the kernel exactly.
+
+``HYP_EXAMPLES_SCALE=N`` multiplies the property test's example budget
+(``tools/fuzz_kernel.py`` runs it at a large scale)."""
+
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from gr_tdigest_spark.operators.agg import TDigestSpec
+from gr_tdigest_spark.sketches import wire
 from gr_tdigest_spark.sketches.tdigest import TDigest
+
+_SCALE = max(int(os.environ.get("HYP_EXAMPLES_SCALE", "1")), 1)
+
+
+def _assert_paths_agree(spec, codes, keys, vals, ws=None):
+    """build_blobs_from_codes (columnar partial output) must emit, for
+    every group, the bytes of encoding build_from_codes' state."""
+    states = spec.build_from_codes(
+        codes.copy(), keys, vals.copy(), None if ws is None else ws.copy()
+    )
+    k2, blobs = spec.build_blobs_from_codes(
+        codes.copy(), keys, vals.copy(), None if ws is None else ws.copy()
+    )
+    assert k2 == list(states.keys())
+    for key, blob in zip(k2, blobs):
+        assert wire.encode(states[key], 3) == blob, key
+    return states
 
 
 def _pdf(keys, values, weights=None):
@@ -132,22 +156,7 @@ class TestColumnarBlobPath:
         vals = rng.lognormal(0, 1, n)
         ws = rng.integers(1, 5, n).astype(float) if weighted else None
         spec = TDigestSpec(max_size=100, precision=prec)
-        states = spec.build_from_codes(
-            codes.copy(), keys, vals.copy(),
-            None if ws is None else ws.copy(),
-        )
-        k2, blobs = spec.build_blobs_from_codes(
-            codes.copy(), keys, vals.copy(),
-            None if ws is None else ws.copy(),
-        )
-        assert set(k2) == set(states.keys())
-        from gr_tdigest_spark.sketches import wire
-        bmap = dict(zip(k2, blobs))
-        for key, st in states.items():
-            # byte-identical: both paths use the same sequential
-            # ∑w·mean association (r2 advice — partition-layout
-            # independence of the data_sum header)
-            assert wire.encode(st, 3) == bmap[key], key
+        _assert_paths_agree(spec, codes, keys, vals, ws)
 
     def test_f64_unit(self):
         self._compare("f64", False, 1)
@@ -171,6 +180,28 @@ class TestColumnarBlobPath:
                                    None)[(0,)]
         _, blobs = spec.build_blobs_from_codes(codes, [(0,)], vals, None)
         assert wire.encode(st, 3) == blobs[0]
+
+    @pytest.mark.parametrize("weighted", [False, True])
+    def test_hundreds_of_rows_per_group(self, weighted):
+        """Groups of 100-1500 distinct values at max_size=1000 — mostly
+        no-merge groups of hundreds of runs. reduceat sums pairwise, so
+        a group total's bits depend on exactly which elements its
+        segment holds; both paths read one shared per-group total and
+        agree on every group, the batch's last group included (its
+        segment runs to the end of the run arrays, and a run count
+        that is a multiple of 8 is where an extra trailing element
+        would regroup the pairwise sum). Wide-range f64 values, so the
+        regrouping shows in the low bits."""
+        rng = np.random.default_rng(18)
+        keys = [(int(i),) for i in range(24)]
+        spec = TDigestSpec(max_size=1000)
+        for last in (104, 256, 504, 656, 776, 1024, 1400):
+            sizes = np.append(rng.integers(100, 1501, 23), last)
+            codes = rng.permutation(np.repeat(np.arange(24), sizes))
+            vals = rng.lognormal(0, 3, codes.size)
+            ws = (rng.integers(1, 4, codes.size).astype(float)
+                  if weighted else None)
+            _assert_paths_agree(spec, codes, keys, vals, ws)
 
     def test_drop_mode_and_empty(self):
         spec = TDigestSpec(max_size=50, on_invalid="drop")
@@ -307,3 +338,79 @@ class TestPileGroupByPreAggregate:
         )
         with pytest.raises(Exception, match="NaN|not allowed"):
             tdigest_agg(df, ["g"], "x", pre_aggregate=True).collect()
+
+
+class TestPartialPathProperty:
+    """Both vectorized t-digest builders agree byte for byte on any
+    batch — group sizes from 1 to 1500 rows (no-merge and compressed
+    groups), empty groups, weights, both precisions — and
+    ``on_invalid='drop'`` equals the strict build of the surviving
+    rows."""
+
+    @settings(max_examples=30 * _SCALE, deadline=None)
+    @given(
+        sizes=st.lists(st.integers(0, 1500), min_size=1, max_size=6),
+        seed=st.integers(0, 2**32 - 1),
+        distinct=st.sampled_from([None, 10, 200]),
+        weighted=st.booleans(),
+        prec=st.sampled_from(["f64", "f32"]),
+        max_size=st.sampled_from([50, 1000]),
+        n_invalid=st.integers(0, 20),
+    )
+    def test_builders_agree(self, sizes, seed, distinct, weighted, prec,
+                            max_size, n_invalid):
+        rng = np.random.default_rng(seed)
+        codes = rng.permutation(np.repeat(np.arange(len(sizes)), sizes))
+        keys = [(i,) for i in range(len(sizes))]
+        vals = rng.lognormal(0, 2, codes.size)
+        if distinct:
+            vals = np.floor(vals * distinct / 4.0)
+        ws = (rng.integers(1, 5, codes.size).astype(float)
+              if weighted else None)
+        strict = _assert_paths_agree(
+            TDigestSpec(max_size=max_size, precision=prec),
+            codes, keys, vals, ws,
+        )
+        # the same rows plus invalid ones: 'drop' filters them with
+        # their codes, leaving exactly the strict build
+        bad = rng.integers(0, len(sizes), n_invalid)
+        bad_vals = rng.choice([np.nan, np.inf, -np.inf], n_invalid)
+        dropped = _assert_paths_agree(
+            TDigestSpec(max_size=max_size, precision=prec,
+                        on_invalid="drop"),
+            np.concatenate([codes, bad]), keys,
+            np.concatenate([vals, bad_vals]),
+            None if ws is None else np.concatenate([ws, np.ones(n_invalid)]),
+        )
+        assert {k: wire.encode(v, 3) for k, v in dropped.items()} == {
+            k: wire.encode(v, 3) for k, v in strict.items()
+        }
+
+
+class TestDropModeSparkPath:
+    def test_drop_equals_strict_build_of_filtered_rows(self, spark):
+        """``on_invalid='drop'`` takes the mapInArrow partial path like
+        the strict mode: its blobs equal the strict build of the rows
+        that survive the filter, NULL-key group included."""
+        from pyspark.sql import functions as F
+        from gr_tdigest_spark.operators import tdigest_agg
+
+        rng = np.random.default_rng(17)
+        n = 1200
+        x = np.round(rng.lognormal(0, 1, n), 2).tolist()
+        for i in range(0, n, 37):
+            x[i] = [None, float("nan"), float("inf")][i % 3]
+        g = [[None, "a", "b", "c"][i % 4] for i in range(n)]
+        df = spark.createDataFrame(list(zip(g, x)), "g string, x double")
+        df = df.coalesce(1)
+        ok = (F.col("x").isNotNull() & ~F.isnan("x")
+              & (F.abs("x") != float("inf")))
+
+        def blobs(frame, **kw):
+            return {
+                r["g"]: bytes(r["tdigest"])
+                for r in tdigest_agg(frame, ["g"], "x", **kw).collect()
+            }
+
+        dropped = blobs(df, on_invalid="drop")
+        assert dropped == blobs(df.where(ok)) and len(dropped) == 4

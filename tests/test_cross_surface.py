@@ -259,3 +259,64 @@ class TestCompanionSQLSurface:
         assert len(bk) == 3
         for r in bk:
             assert r["s"] == 16 and r["d"] >= 16.0
+
+
+# (Python surface, SQL surface or None, answer on a NULL blob): one row
+# per companion query; every name registered by register_companion_sql
+# appears in its SQL form
+_NULL_BLOB_QUERIES = {
+    "hll_estimate": (lambda C, b: C.hll_estimate(b),
+                     "hll_estimate(b)", None),
+    "kll_quantile": (lambda C, b: C.kll_quantile(b, 0.5),
+                     "kll_quantile(b, 0.5)", None),
+    "kll_rank": (lambda C, b: C.kll_rank(b, 1.0), None, None),
+    "kll_count": (lambda C, b: C.kll_count(b), None, None),
+    "cms_estimate": (lambda C, b: C.cms_estimate(b, ["a"]), None, None),
+    "cms_estimate_col": (lambda C, b: C.cms_estimate_col(b, F.lit("a")),
+                         "cms_estimate(b, 'a')", 0),
+    "bloom_contains": (lambda C, b: C.bloom_contains(b, F.lit("a")),
+                       "bloom_contains(b, 'a')", False),
+    "bottomk_distinct": (lambda C, b: C.bottomk_distinct(b),
+                         "bottomk_distinct(b)", None),
+    "bottomk_sample": (lambda C, b: C.bottomk_sample(b),
+                       "bottomk_sample(b)", None),
+    "minhash_jaccard": (lambda C, b: C.minhash_jaccard(b, b),
+                        "minhash_jaccard(b, b)", None),
+    "hll_intersect": (lambda C, b: C.hll_intersect_estimate(b, b),
+                      "hll_intersect(b, b)", None),
+    "cms_inner_product": (lambda C, b: C.cms_inner_product(b, b),
+                          "cms_inner_product(b, b)", None),
+    "minhash_hll_intersect": (
+        lambda C, b: C.minhash_hll_intersect_estimate(b, b, b, b),
+        None, None),
+    **{
+        f"{kind}_merge": (
+            lambda C, b, spec=spec: C.merge_sketches(b, getattr(C, spec)()),
+            f"{kind}_merge(b)", None,
+        )
+        for kind, spec in [
+            ("hll", "HLLSpec"), ("cms", "CMSSpec"), ("bloom", "BloomSpec"),
+            ("minhash", "MinHashSpec"), ("kll", "KLLSpec"),
+            ("bottomk", "BottomKSpec"),
+        ]
+    },
+}
+
+
+class TestCompanionNullBlobs:
+    """A NULL sketch blob answers NULL on both surfaces — except the
+    documented membership / per-row count probes (bloom_contains →
+    false, cms_estimate_col → 0) — never a TypeError."""
+
+    @pytest.mark.parametrize("query", sorted(_NULL_BLOB_QUERIES))
+    def test_null_blob(self, spark, query):
+        from gr_tdigest_spark.operators import companions as C
+
+        python_expr, sql_expr, answer = _NULL_BLOB_QUERIES[query]
+        df = spark.createDataFrame([(None,)], "b binary")
+        assert df.select(python_expr(C, F.col("b"))).collect()[0][0] == answer
+        if sql_expr is not None:
+            C.register_companion_sql(spark)
+            df.createOrReplaceTempView("null_blobs")
+            got = spark.sql(f"SELECT {sql_expr} FROM null_blobs").collect()
+            assert got[0][0] == answer

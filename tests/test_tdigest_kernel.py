@@ -428,6 +428,55 @@ class TestScalesMonotone:
         assert np.all((got >= 0) & (got <= 1))
 
 
+def _q_to_k_reference(q, d, family, n):
+    """The per-family q→k formulas as written out before ``q_to_k``
+    became ``_k_scale_factor · _g_of_q`` — the bit-for-bit oracle."""
+    eps = 1e-15
+    qq = np.clip(q, eps, 1.0 - eps)
+    if family == "quad":
+        r = np.where(qq < 0.5, np.sqrt(qq * 0.5),
+                     1.0 - np.sqrt((1.0 - qq) * 0.5))
+        return d * r
+    if family == "k1":
+        s = np.arcsin(np.clip(2.0 * qq - 1.0, -1.0, 1.0))
+        return (d / (2.0 * math.pi)) * s
+    if family == "k2":
+        return (d / (4.0 * math.log(2.0))) * np.log(qq / (1.0 - qq))
+    if family == "k2norm":
+        factor = d / (math.log(n / d) * 4.0 + 24.0)
+        return factor * np.log(qq / (1.0 - qq))
+    a = np.log(1.0 / (1.0 - qq))
+    b = np.log(1.0 / qq)
+    return (d / 4.0) * np.log(np.maximum(a / b, eps))
+
+
+class TestQToK:
+    @pytest.mark.parametrize("family", ["quad", "k1", "k2", "k2norm", "k3"])
+    @pytest.mark.parametrize("d", [7.0, 100.0, 1000.0])
+    def test_matches_reference_bits(self, family, d):
+        from gr_tdigest_spark.sketches.tdigest import q_to_k
+
+        n = 5000.0
+        grid = np.concatenate([
+            [0.0, 1e-16, 1e-15, 1e-9, 0.25, 0.5, 0.75, 1 - 1e-9, 1.0],
+            np.linspace(0.0, 1.0, 1001),
+            np.random.default_rng(5).random(500),
+        ])
+        got = np.asarray(q_to_k(grid, d, family, n), dtype=np.float64)
+        ref = np.asarray(_q_to_k_reference(grid, d, family, n))
+        assert got.tobytes() == ref.tobytes()
+        for q in (0.0, 0.3, 0.5, 1.0):
+            assert (np.float64(q_to_k(q, d, family, n)).tobytes()
+                    == np.float64(_q_to_k_reference(q, d, family, n))
+                    .tobytes())
+
+    def test_unknown_family_raises(self):
+        from gr_tdigest_spark.sketches.tdigest import q_to_k
+
+        with pytest.raises(ValueError, match="unknown scale family"):
+            q_to_k(0.5, 100.0, "k9", 10.0)
+
+
 class TestTransforms:
     def test_scale_weights_preserves_shape(self):
         v = np.random.default_rng(3).uniform(size=5000)

@@ -21,6 +21,7 @@ import sys
 TARGETS = [
     "tests/test_property_merge_laws.py",
     "tests/test_property_batch_query.py",
+    "tests/test_agg_vectorized.py::TestPartialPathProperty",
     "tests/test_sampling.py::TestBottomKKernel",
 ]
 
